@@ -91,86 +91,78 @@ object Hnsw {
     math.floor(-math.log(u) * mL).toInt
   }
 
-  /** Greedy beam search at one level: returns up to `ef` (dist, node)
-    * pairs, ascending dist, ties by node id (deterministic). */
-  private def searchLayer(g: Graph, q: Array[Float], entry: Seq[(Double, Int)],
-                          ef: Int, level: Int): Seq[(Double, Int)] = {
-    val ord = Ordering.Tuple2[Double, Int]
-    val visited = collection.mutable.HashSet[Int](entry.map(_._2): _*)
-    val candidates = collection.mutable.TreeSet[(Double, Int)](entry: _*)(ord)
-    val best = collection.mutable.TreeSet[(Double, Int)](entry: _*)(ord)
-    while (candidates.nonEmpty) {
-      val c = candidates.head
-      candidates.remove(c)
-      if (best.size >= ef && c._1 > best.last._1) {
-        candidates.clear() // every remaining candidate is farther
-      } else {
-        val ls = g.links(c._2)
-        val nbrs = if (level < ls.length) ls(level) else Array.empty[Int]
-        var i = 0
-        while (i < nbrs.length) {
-          val n = nbrs(i)
-          if (visited.add(n)) {
-            val d = dist(q, g.vecs(n))
-            if (best.size < ef || d < best.last._1 ||
-                (d == best.last._1 && n < best.last._2)) {
-              candidates.add((d, n))
-              best.add((d, n))
-              if (best.size > ef) best.remove(best.last)
-            }
-          }
-          i += 1
-        }
-      }
-    }
-    best.toSeq
+  /** A beam's (dist, node) pairs, ascending by (dist, node). */
+  private final case class Beam(dists: Array[Double], nodes: Array[Int]) {
+    def size: Int = nodes.length
+    def head: Beam = Beam(Array(dists(0)), Array(nodes(0)))
+    def pairs: Seq[(Double, Int)] = dists.toSeq.zip(nodes)
   }
+  private def beamOf(node: Int, d: Double): Beam = Beam(Array(d), Array(node))
 
-  /** [[searchLayer]] with an allow-predicate over node indices — the
-    * hnswlib filtered-search semantics: failing nodes are still
-    * TRAVERSED (they stay navigable, keeping the beam connected
-    * through filtered-out regions) but never enter the RESULT set, so
-    * the return is up to `ef` PASSING nodes. Kept as a separate method
-    * rather than a pass-everything default on [[searchLayer]] so the
-    * unfiltered hot path stays byte-identical to the gated round-17
-    * behavior. The beam bound comes from the worst PASSING result, so
-    * a highly selective filter widens traversal — exactly hnswlib's
-    * trade-off. */
-  private def searchLayerFiltered(g: Graph, q: Array[Float],
-                                  entry: Seq[(Double, Int)], ef: Int,
-                                  level: Int, pass: Int => Boolean): Seq[(Double, Int)] = {
-    val ord = Ordering.Tuple2[Double, Int]
-    val visited = collection.mutable.HashSet[Int](entry.map(_._2): _*)
-    val candidates = collection.mutable.TreeSet[(Double, Int)](entry: _*)(ord)
-    val best = collection.mutable.TreeSet[(Double, Int)](
-      entry.filter(t => pass(t._2)): _*)(ord)
-    while (candidates.nonEmpty) {
-      val c = candidates.head
-      candidates.remove(c)
-      if (best.size >= ef && c._1 > best.last._1) {
-        candidates.clear()
-      } else {
-        val ls = g.links(c._2)
-        val nbrs = if (level < ls.length) ls(level) else Array.empty[Int]
-        var i = 0
-        while (i < nbrs.length) {
-          val n = nbrs(i)
-          if (visited.add(n)) {
+  /** Greedy beam search at one level: returns up to `ef` (dist, node)
+    * pairs, ascending dist, ties by node id (deterministic).
+    *
+    * `pass` (null = every node) is the hnswlib filtered-search rule:
+    * failing nodes are still TRAVERSED (they stay navigable, keeping
+    * the beam connected through filtered-out regions) but never enter
+    * the RESULT set, so the return is up to `ef` PASSING nodes. The
+    * beam bound comes from the worst passing result, so a highly
+    * selective filter widens traversal — exactly hnswlib's trade-off.
+    *
+    * Per call it allocates a visited bitset of size/64 words and two
+    * [[TopK]] heaps sized min(ef, size), never anything per candidate:
+    * a min-heap frontier and a max-heap of results whose root is the
+    * worst kept pair. Both order by (dist, node) under
+    * java.lang.Double.compare, the order of a TreeSet[(Double, Int)];
+    * the early exit (`dist > worst`) and the admission rule
+    * (`d < worst || (d == worst && n < worstNode)`) are IEEE
+    * comparisons, and a new pair is pushed before the root is evicted.
+    * So the kept set and its order are exactly a TreeSet beam's, and so
+    * is every build that calls this (TopKParitySpec runs a TreeSet beam
+    * as its oracle and pins a build hash). */
+  private def searchLayer(g: Graph, q: Array[Float], entry: Beam, ef: Int,
+                          level: Int, pass: Int => Boolean = null): Beam = {
+    val visited = new Array[Long]((g.size + 63) >>> 6)
+    val slots = math.min(ef, g.size)
+    val frontier = new TopK(maxRoot = false, slots)
+    val best = new TopK(maxRoot = true, slots)
+    var i = 0
+    while (i < entry.size) {
+      val e = entry.nodes(i)
+      visited(e >>> 6) |= 1L << e
+      frontier.push(entry.dists(i), e, e)
+      if (pass == null || pass(e)) best.push(entry.dists(i), e, e)
+      i += 1
+    }
+    // every remaining candidate is farther than the worst kept result
+    while (frontier.size > 0 &&
+           !(best.size >= ef && frontier.key(0) > best.key(0))) {
+      val c = frontier.row(0)
+      frontier.pop()
+      val ls = g.links(c)
+      if (level < ls.length) {
+        val nbrs = ls(level)
+        var j = 0
+        while (j < nbrs.length) {
+          val n = nbrs(j)
+          if ((visited(n >>> 6) & (1L << n)) == 0) {
+            visited(n >>> 6) |= 1L << n
             val d = dist(q, g.vecs(n))
-            if (best.size < ef || d < best.last._1 ||
-                (d == best.last._1 && n < best.last._2)) {
-              candidates.add((d, n))
-              if (pass(n)) {
-                best.add((d, n))
-                if (best.size > ef) best.remove(best.last)
+            if (best.size < ef || d < best.key(0) ||
+                (d == best.key(0) && n < best.id(0))) {
+              frontier.push(d, n, n)
+              if (pass == null || pass(n)) {
+                best.push(d, n, n)
+                if (best.size > ef) best.pop()
               }
             }
           }
-          i += 1
+          j += 1
         }
       }
     }
-    best.toSeq
+    best.sortAscending()
+    Beam(Array.tabulate(best.size)(best.key), Array.tabulate(best.size)(best.row))
   }
 
   /** §4 heuristic neighbor selection (Algorithm 4): walk candidates
@@ -253,10 +245,10 @@ object Hnsw {
       val q = vecs(i)
       val l = levels(i)
       // 1. greedy descent on levels above l (ef = 1)
-      var ep: Seq[(Double, Int)] = Seq((dist(q, vecs(entry)), entry))
+      var ep = beamOf(entry, dist(q, vecs(entry)))
       var lc = maxLevel
       while (lc > l) {
-        ep = Seq(searchLayer(g, q, ep, 1, lc).head)
+        ep = searchLayer(g, q, ep, 1, lc).head
         lc -= 1
       }
       // 2. insert at levels min(l, maxLevel) .. 0
@@ -265,9 +257,9 @@ object Hnsw {
         val cand = searchLayer(g, q, ep, efConstruction, lc)
         val selected: Seq[Int] =
           if (heuristic)
-            selectHeuristic(vecs, links, q, cand, maxAt(lc), lc,
+            selectHeuristic(vecs, links, q, cand.pairs, maxAt(lc), lc,
               extend = true).toSeq
-          else cand.take(maxAt(lc)).map(_._2)
+          else cand.nodes.take(maxAt(lc)).toSeq
         links(i)(lc) = selected.toArray
         // bidirectional: add i to each neighbor, shrinking over-cap
         // lists by the SAME selection mode as forward links
@@ -281,8 +273,13 @@ object Hnsw {
                 merged.map(x => (dist(vecs(nb), vecs(x)), x))
                   .sortBy(identity).toSeq,
                 maxAt(lc), lc, extend = false)
-            else merged.map(x => (dist(vecs(nb), vecs(x)), x))
-              .sortBy(identity).take(maxAt(lc)).map(_._2).toArray
+            else {
+              // keep the maxAt nearest by (dist, node), ascending
+              val keep = new TopK(maxRoot = true, maxAt(lc))
+              merged.foreach(x => keep.offer(dist(vecs(nb), vecs(x)), x, x))
+              keep.sortAscending()
+              Array.tabulate(keep.size)(keep.row)
+            }
         }
         ep = cand
         lc -= 1
@@ -373,30 +370,54 @@ object Hnsw {
   def search(g: Graph, query: Array[Float], efSearch: Int, topK: Int,
              dropId: Option[Long] = None,
              allow: Option[Int => Boolean] = None): Seq[(Long, Double)] = {
-    require(query.forall(x => !x.isNaN && !x.isInfinite), "query must be finite")
-    var ep: Seq[(Double, Int)] = Seq((dist(query, g.vecs(g.entry)), g.entry))
+    requireFinite(query)
+    searchFinite(g, query, efSearch, topK, dropId, allow)
+  }
+
+  /** Fail unless every component of `v` is finite: one primitive pass,
+    * the check every in-process ANN entry point runs once per query. */
+  private[graft] def requireFinite(v: Array[Float]): Unit = {
+    var ok = v != null
+    var i = 0
+    while (ok && i < v.length) {
+      ok = !java.lang.Float.isNaN(v(i)) && !java.lang.Float.isInfinite(v(i))
+      i += 1
+    }
+    require(ok, "query vector must be finite")
+  }
+
+  /** [[search]] for a caller that has already run [[requireFinite]]
+    * (LocalAnn.search checks once per request). */
+  private[graft] def searchFinite(g: Graph, query: Array[Float], efSearch: Int,
+                                  topK: Int, dropId: Option[Long],
+                                  allow: Option[Int => Boolean]): Seq[(Long, Double)] = {
+    var ep = beamOf(g.entry, dist(query, g.vecs(g.entry)))
     var lc = g.maxLevel
     while (lc > 0) {
-      ep = Seq(searchLayer(g, query, ep, 1, lc).head)
+      ep = searchLayer(g, query, ep, 1, lc).head
       lc -= 1
     }
     val ef = math.max(efSearch, topK + (if (dropId.isDefined) 1 else 0))
-    val hits = allow match {
-      case Some(pass) => searchLayerFiltered(g, query, ep, ef, 0, pass)
-      case None       => searchLayer(g, query, ep, ef, 0)
-    }
-    hits
-      .filterNot(t => dropId.contains(g.ids(t._2)))
-      .map { case (_, node) =>
+    val hits = searchLayer(g, query, ep, ef, 0, allow.orNull)
+    // top-k by (sim desc, id asc, NaN last) = ascending (−sim, id)
+    val top = new TopK(maxRoot = true, math.min(topK, hits.size))
+    val drop = dropId.isDefined
+    val dropped = dropId.getOrElse(0L)
+    var i = 0
+    while (i < hits.size) {
+      val node = hits.nodes(i)
+      if (!(drop && g.ids(node) == dropped)) {
         val c = cosine(query, g.vecs(node))
         val sim =
           if (c.isNaN) Double.NaN
           else java.math.BigDecimal.valueOf(c * 1e6)
             .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e6
-        (g.ids(node), sim)
+        top.offer(-sim, g.ids(node), node)
       }
-      .sortBy { case (id, sim) => (sim.isNaN, -sim, id) }
-      .take(topK)
+      i += 1
+    }
+    top.sortAscending()
+    Seq.tabulate(top.size)(j => (top.id(j), top.negKey(j)))
   }
 
   /** Bit-level structural equality — ids, vectors, levels, links,

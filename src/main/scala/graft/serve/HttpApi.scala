@@ -769,20 +769,19 @@ object HttpApi {
     }
     val parsed = resps.map(r => mapper.readTree(r.body()))
     var shardCount = 0
-    val hits = collection.mutable.ArrayBuffer[(Long, Double)]()
+    val hits = collection.mutable.ArrayBuffer[LocalAnn.Hit]()
     parsed.foreach { o =>
       shardCount += (if (o.path("shards").isInt) o.path("shards").asInt else 1)
       val rs = o.path("results")
       (0 until rs.size()).foreach { i =>
         val h = rs.get(i)
         val simNode = h.path("sim")
-        hits += ((h.path("neighbor_id").asLong,
+        hits += LocalAnn.Hit(h.path("neighbor_id").asLong,
           if (simNode.isNull || simNode.isMissingNode) Double.NaN
-          else simNode.asDouble))
+          else simNode.asDouble)
       }
     }
-    val merged = hits.sortBy { case (id, sim) => (sim.isNaN, -sim, id) }
-      .take(topK)
+    val merged = LocalAnn.topHits(hits.toSeq, topK)
     val ms = (System.nanoTime() - t0) / 1e6
     s.predictionCount.increment()
     s.totalLatencyMs.add(ms)
@@ -797,7 +796,7 @@ object HttpApi {
     // shard's primary answered) — the hedging observability hook
     o.put("hedged", hedges.get)
     val arr = o.putArray("results")
-    merged.foreach { case (id, sim) =>
+    merged.foreach { case LocalAnn.Hit(id, sim) =>
       val e = arr.addObject()
       e.put("neighbor_id", id)
       if (sim.isNaN) e.putNull("sim") else e.put("sim", sim)

@@ -2,7 +2,7 @@ package graft.serve
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.{Bq, Hnsw, Ivf, Opq, Pq, Sq}
+import graft.operators.{Bq, Hnsw, Ivf, Opq, Pq, Sq, TopK}
 
 /** Driver-local ANN searcher over a REGISTERED artifact — the serving
   * half of the ANN tier (round-15 verdict #4: registry artifacts were
@@ -68,7 +68,7 @@ object LocalAnn {
     * semantics). Callers validate attr existence up front so the hot
     * loop never throws. */
   private def passes(idx: Index, i: Int, allow: Map[String, Set[Long]]): Boolean =
-    allow.forall { case (a, set) => set.contains(idx.attrs(a)(i)) }
+    allow.isEmpty || allow.forall { case (a, set) => set.contains(idx.attrs(a)(i)) }
 
   /** Fail loudly (before the scan) when a filter names an attribute the
     * index did not load — a typo'd attr must be a request error, never
@@ -348,6 +348,36 @@ object LocalAnn {
     if (denom > 0) dab / denom else Double.NaN
   }
 
+  /** The exact rerank sim: [[cosine]] rounded to 1e−6 like Spark's
+    * round, NaN (zero-norm row) kept as the sorts-last marker. */
+  private def roundedCosine(a: Array[Float], b: Array[Float]): Double = {
+    val c = cosine(a, b)
+    if (c.isNaN) Double.NaN else sparkRound(c * 1e6) / 1e6
+  }
+
+  /** Exact rerank of a shortlist: [[roundedCosine]] per survivor, top-k
+    * by (sim desc, id asc, NaN last) — offered to a [[TopK]] as
+    * (−sim, id). The survivors are read in heap order, unsorted: the
+    * rerank order is total on (sim, id), so the order of its input
+    * cannot change its output. */
+  private def rerank(idx: Index, q: Array[Float], short: TopK, topK: Int): Seq[Hit] = {
+    val top = new TopK(maxRoot = true, math.min(topK, short.size))
+    var i = 0
+    while (i < short.size) {
+      val row = short.row(i)
+      top.offer(-roundedCosine(q, idx.vecs(row)), idx.ids(row), row)
+      i += 1
+    }
+    hitsOf(top)
+  }
+
+  /** The hits of a (−sim, id) top-k, in (sim desc, id asc, NaN last)
+    * order. */
+  private def hitsOf(top: TopK): Seq[Hit] = {
+    top.sortAscending()
+    Array.tabulate(top.size)(i => Hit(top.id(i), top.negKey(i))).toSeq
+  }
+
   /** Fan-out + merge over index SHARDS (round-17 — the "layer above"
     * the r16 verdict noted was missing: one serving node holds one
     * bounded shard, and a fleet answers by searching every shard and
@@ -367,9 +397,15 @@ object LocalAnn {
                     dropSelf: Boolean = true,
                     allow: Map[String, Set[Long]] = Map.empty): Seq[Hit] = {
     require(shards.nonEmpty, "at least one shard required")
-    shards.flatMap(search(_, queryId, query, shortlist, topK, dropSelf, allow))
-      .sortBy(h => (h.sim.isNaN, -h.sim, h.neighborId))
-      .take(topK)
+    topHits(shards.flatMap(search(_, queryId, query, shortlist, topK, dropSelf, allow)), topK)
+  }
+
+  /** Merge per-shard (or per-upstream) top-k lists: the top-k of
+    * `hits` by (sim desc, id asc, NaN last). */
+  private[serve] def topHits(hits: Seq[Hit], topK: Int): Seq[Hit] = {
+    val top = new TopK(maxRoot = true, math.min(topK, hits.size))
+    hits.foreach(h => top.offer(-h.sim, h.neighborId, 0))
+    hitsOf(top)
   }
 
   /** Search the index for one query vector (the `/ann/search` hot
@@ -387,12 +423,22 @@ object LocalAnn {
     * hit the filter would have admitted past rank k — the q169 gate
     * measures exactly that gap.) Unknown attr names fail the request
     * loudly; an empty allowed set is a legal constraint that matches
-    * nothing. */
+    * nothing.
+    *
+    * Selection is bounded and allocation-free per candidate: every
+    * shortlist, rerank and ivf probe set is a [[TopK]] max-heap on
+    * primitive arrays holding at most min(shortlist, size) entries —
+    * sized from the index, so a huge `shortlist` costs no more than
+    * the index size — and HNSW runs [[Hnsw]]'s primitive-heap beam.
+    * Each heap orders (key, id) by java.lang.Double.compare, the total
+    * order `sortBy` gives (Double, Long) tuples, so the hits, their order
+    * and their sim bits are those of a sort-then-take selection
+    * (TopKParitySpec checks that against such code). The query's
+    * finiteness is checked here, once, for every family. */
   def search(idx: Index, queryId: Long, query: Array[Float],
              shortlist: Int, topK: Int, dropSelf: Boolean = true,
              allow: Map[String, Set[Long]] = Map.empty): Seq[Hit] = {
-    require(query != null && query.forall(x => !x.isNaN && !x.isInfinite),
-      "query vector must be finite")
+    Hnsw.requireFinite(query)
     validateFilter(idx, allow)
     idx.family match {
       case "opq" | "pq" => searchPq(idx, queryId, query, shortlist, topK, dropSelf, allow)
@@ -414,7 +460,7 @@ object LocalAnn {
         val pred: Option[Int => Boolean] =
           if (allow.isEmpty && idx.deleted.isEmpty) None
           else Some((i: Int) => idx.live(i) && passes(idx, i, allow))
-        Hnsw.search(idx.hnsw.get, query, efSearch = shortlist, topK = topK,
+        Hnsw.searchFinite(idx.hnsw.get, query, efSearch = shortlist, topK = topK,
             dropId = if (dropSelf) Some(queryId) else None,
             allow = pred)
           .map { case (id, sim) => Hit(id, sim) }
@@ -452,7 +498,7 @@ object LocalAnn {
       qcodes(w) = word
       w += 1
     }
-    val cand = collection.mutable.ArrayBuffer[(Int, Long, Int)]()
+    val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     var i = 0
     while (i < idx.size) {
       val cs = idx.lcodes(i)
@@ -463,17 +509,11 @@ object LocalAnn {
         while (j < nWords) {
           ham += java.lang.Long.bitCount(qcodes(j) ^ cs(j)); j += 1
         }
-        cand += ((ham, idx.ids(i), i))
+        short.offer(ham.toDouble, idx.ids(i), i)
       }
       i += 1
     }
-    val short = cand.sortBy(t => (t._1, t._2)).take(shortlist)
-    short.map { case (_, id, row) =>
-      val c = cosine(q, idx.vecs(row))
-      Hit(id, if (c.isNaN) Double.NaN else sparkRound(c * 1e6) / 1e6)
-    }
-      .sortBy(h => (h.sim.isNaN, -h.sim, h.neighborId))
-      .take(topK).toSeq
+    rerank(idx, q, short, topK)
   }
 
   /** sq8: decode-and-scan shortlist + exact rerank, mirroring
@@ -489,7 +529,7 @@ object LocalAnn {
     require(q.length == sq.dim,
       s"query dim ${q.length} does not match the index")
     val spans = sq.spans
-    val cand = collection.mutable.ArrayBuffer[(Double, Long, Int)]()
+    val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     var i = 0
     while (i < idx.size) {
       val cs = idx.codes(i)
@@ -506,20 +546,21 @@ object LocalAnn {
         }
         val denom = math.sqrt(daa) * math.sqrt(dbb)
         val approx = if (denom > 0) dab / denom else Double.NaN
-        cand += ((approx, idx.ids(i), i))
+        // (approx desc, NaN last, id asc) = ascending (−approx, id)
+        short.offer(-approx, idx.ids(i), i)
       }
       i += 1
     }
-    val short = cand
-      .sortBy(t => (t._1.isNaN, -t._1, t._2)).take(shortlist)
-    short.map { case (_, id, row) =>
-      val c = cosine(q, idx.vecs(row))
-      Hit(id, if (c.isNaN) Double.NaN else sparkRound(c * 1e6) / 1e6)
-    }
-      .sortBy(h => (h.sim.isNaN, -h.sim, h.neighborId))
-      .take(topK).toSeq
+    rerank(idx, q, short, topK)
   }
 
+  /** pq/opq: rotate, ADC-scan every live code, keep the `shortlist`
+    * smallest (adc, id) in a bounded [[TopK]] — the heap's root is the
+    * current worst, so a candidate costs one compare unless it beats
+    * it — then exact-rerank the survivors. The heap keeps exactly the
+    * rows `sortBy((adc, id)).take(shortlist)` kept (same total order on
+    * adc, ties by id), and the rerank is a total order on (sim, id), so
+    * the survivors need no sort of their own. */
   private def searchPq(idx: Index, queryId: Long, queryRaw: Array[Float],
                        shortlist: Int, topK: Int, dropSelf: Boolean,
                        allow: Map[String, Set[Long]]): Seq[Hit] = {
@@ -563,7 +604,7 @@ object LocalAnn {
       j += 1
     }
     // 3. ADC over all codes; shortlist by (adc asc, id asc)
-    val cand = collection.mutable.ArrayBuffer[(Double, Long, Int)]()
+    val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     i = 0
     while (i < idx.size) {
       val cs = idx.codes(i)
@@ -572,20 +613,14 @@ object LocalAnn {
         var adc = 0.0
         var m = 0
         while (m < cb.m) { adc += tab(m * cb.k + cs(m)); m += 1 }
-        cand += ((adc, idx.ids(i), i))
+        short.offer(adc, idx.ids(i), i)
       }
       i += 1
     }
-    val short = cand.sortBy(t => (t._1, t._2)).take(shortlist)
     // 4. exact rerank: rounded cosine (on the UNNORMALIZED rotated
     // query — rerank joins the raw qvec), ties (sim desc, id asc);
     // NaN sims (zero-norm corpus rows) sort last, like SQL nulls
-    short.map { case (_, id, row) =>
-      val c = cosine(q, idx.vecs(row))
-      Hit(id, if (c.isNaN) Double.NaN else sparkRound(c * 1e6) / 1e6)
-    }
-      .sortBy(h => (h.sim.isNaN, -h.sim, h.neighborId))
-      .take(topK).toSeq
+    rerank(idx, q, short, topK)
   }
 
   private def searchIvf(idx: Index, queryId: Long, q: Array[Float],
@@ -602,29 +637,28 @@ object LocalAnn {
     // O(nlist) sweep on the request path.
     val candidateCells: Seq[Int] = idx.centGraph match {
       case Some(cp) =>
-        Hnsw.search(cp.g, q, cp.efSearch, cp.cand).map(_._1.toInt)
+        Hnsw.searchFinite(cp.g, q, cp.efSearch, cp.cand, None, None).map(_._1.toInt)
       case None => idx.centroids.indices
     }
-    val probed = candidateCells
-      .map { c =>
-        var s = 0.0; var i = 0
-        while (i < q.length) { s += q(i).toDouble * idx.centroids(c)(i); i += 1 }
-        (s, c)
-      }
-      .sortBy { case (sim, cid) => (-sim, cid) }
-      .take(nProbe).map(_._2).toSet
-    val hits = collection.mutable.ArrayBuffer[Hit]()
+    val probes = new TopK(maxRoot = true, math.min(nProbe, candidateCells.size))
+    candidateCells.foreach { c =>
+      var s = 0.0; var i = 0
+      while (i < q.length) { s += q(i).toDouble * idx.centroids(c)(i); i += 1 }
+      probes.offer(-s, c, c)
+    }
+    val probed = new Array[Boolean](idx.centroids.length)
+    (0 until probes.size).foreach(p => probed(probes.row(p)) = true)
+    val top = new TopK(maxRoot = true, math.min(topK, idx.size))
     var i = 0
     while (i < idx.size) {
-      if (probed.contains(idx.cellOf(i)) && idx.live(i) &&
+      val cell = idx.cellOf(i)
+      if (cell >= 0 && cell < probed.length && probed(cell) && idx.live(i) &&
           !(dropSelf && idx.ids(i) == queryId) &&
           passes(idx, i, allow)) {
-        val c = cosine(q, idx.vecs(i))
-        hits += Hit(idx.ids(i),
-          if (c.isNaN) Double.NaN else sparkRound(c * 1e6) / 1e6)
+        top.offer(-roundedCosine(q, idx.vecs(i)), idx.ids(i), i)
       }
       i += 1
     }
-    hits.sortBy(h => (h.sim.isNaN, -h.sim, h.neighborId)).take(topK).toSeq
+    hitsOf(top)
   }
 }
