@@ -14,10 +14,12 @@ object Comparison {
   def metricsRow(name: String, scored: DataFrame, label: Column,
                  score: Column, tau: Double = 0.5): DataFrame = {
     // One fully LAZY plan per model: the three metrics all derive from
-    // the same distinct-score histogram (Metrics.scoreHistogram), and
-    // because the three branches reference the identical byScore
-    // subtree, Catalyst's ReuseExchange dedups the groupBy(score)
-    // shuffle at execution. The 1-row metric frames join by broadcast
+    // the same distinct-score histogram (Metrics.scoreHistogram). The
+    // groupBy(score) shuffle is NOT shared: column pruning gives each
+    // branch a different aggregate, so ReuseExchange finds no match and
+    // the scored frame is scanned and shuffled per branch (q41's final
+    // AQE plan: 4 scans of `events`, 2 reused exchanges; q42 and q45 also
+    // scan it 4 times). The 1-row metric frames join by broadcast
     // (BroadcastNestedLoopJoin, never CartesianProductExec), so a
     // leaderboard of N models is ONE job — the previous shape paid
     // 2 eager driver actions per model, and this query class is

@@ -155,11 +155,15 @@ object Metrics {
              equiDepth: Boolean = false): DataFrame =
     rocAucFromHistogram(scoreHistogram(df, label, score), equiDepth)
 
-  /** The shared (s, cnt, pos) distinct-score histogram — ONE shuffle on
+  /** The shared (s, cnt, pos) distinct-score histogram — one shuffle on
     * score, the common prefix of rocAuc / averagePrecision / confusion.
-    * A leaderboard computes it once per model, persists the small
-    * post-shuffle frame, and derives all three metrics from it
-    * (Comparison.metricsRow) instead of re-shuffling per metric.
+    * Comparison.metricsRow derives all three metrics from ONE lazy
+    * histogram frame per model; nothing is persisted. That saves plan
+    * code, not shuffles: each consumer reads the histogram through a
+    * differently column-pruned aggregate (count and sum, the score keys
+    * only, the count only), so the optimized branches are different
+    * exchanges and ReuseExchange cannot merge them — q41's final AQE
+    * plan scans `events` 4 times with only 2 reused exchanges.
     * Contract: `label` is non-null 0/1, as throughout this file. */
   def scoreHistogram(df: DataFrame, label: Column, score: Column): DataFrame =
     df.groupBy(score.as("s"))

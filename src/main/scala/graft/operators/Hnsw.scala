@@ -50,18 +50,32 @@ object Hnsw {
                          entry: Int, maxLevel: Int, m: Int, efC: Int,
                          seed: Long, heuristic: Boolean = false) {
     def size: Int = ids.length
+    /** Each node's [[norm]], computed once per graph value on first use
+      * (after a build, append or load) and never persisted. */
+    private[operators] lazy val norms: Array[Double] = vecs.map(norm)
   }
 
-  private def dist(a: Array[Float], b: Array[Float]): Double = {
-    var dab = 0.0; var daa = 0.0; var dbb = 0.0
+  /** √(Σ x²) with the in-order double sum a fused dot-and-norms loop
+    * accumulates, so a distance from precomputed norms is bit-identical
+    * to one that sums all three in the same pass. */
+  private def norm(v: Array[Float]): Double = {
+    var s = 0.0
     var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dab += x * y; daa += x * x; dbb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(daa) * math.sqrt(dbb)
-    if (denom > 0) 1.0 - dab / denom else 2.0 // zero-norm rows sort last
+    while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
+    math.sqrt(s)
+  }
+
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < a.length) { d += a(i).toDouble * b(i).toDouble; i += 1 }
+    d
+  }
+
+  /** Cosine dissimilarity of `a` and `b` given their [[norm]]s. */
+  private def dist(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double = {
+    val denom = na * nb
+    if (denom > 0) 1.0 - dot(a, b) / denom else 2.0 // zero-norm rows sort last
   }
 
   /** NativeVector.cosine verbatim: in-order double dot, NaN when a norm
@@ -69,16 +83,9 @@ object Hnsw {
     * [[dist]] keeps its 2.0 sentinel because graph-build comparisons
     * must stay total, but EMITTED sims use the NaN-sorts-last
     * convention so hits merge bit-compatibly across families). */
-  private def cosine(a: Array[Float], b: Array[Float]): Double = {
-    var dab = 0.0; var daa = 0.0; var dbb = 0.0
-    var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dab += x * y; daa += x * x; dbb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(daa) * math.sqrt(dbb)
-    if (denom > 0) dab / denom else Double.NaN
+  private def cosine(a: Array[Float], na: Double, b: Array[Float], nb: Double): Double = {
+    val denom = na * nb
+    if (denom > 0) dot(a, b) / denom else Double.NaN
   }
 
   /** Deterministic level draw: xxhash64(id, seed) → u ∈ (0,1) →
@@ -120,8 +127,9 @@ object Hnsw {
     * So the kept set and its order are exactly a TreeSet beam's, and so
     * is every build that calls this (TopKParitySpec runs a TreeSet beam
     * as its oracle and pins a build hash). */
-  private def searchLayer(g: Graph, q: Array[Float], entry: Beam, ef: Int,
+  private def searchLayer(g: Graph, q: Array[Float], qn: Double, entry: Beam, ef: Int,
                           level: Int, pass: Int => Boolean = null): Beam = {
+    val norms = g.norms
     val visited = new Array[Long]((g.size + 63) >>> 6)
     val slots = math.min(ef, g.size)
     val frontier = new TopK(maxRoot = false, slots)
@@ -147,7 +155,7 @@ object Hnsw {
           val n = nbrs(j)
           if ((visited(n >>> 6) & (1L << n)) == 0) {
             visited(n >>> 6) |= 1L << n
-            val d = dist(q, g.vecs(n))
+            val d = dist(q, qn, g.vecs(n), norms(n))
             if (best.size < ef || d < best.key(0) ||
                 (d == best.key(0) && n < best.id(0))) {
               frontier.push(d, n, n)
@@ -183,9 +191,9 @@ object Hnsw {
     *
     * Deterministic: the working set orders by (dist, id); ties on the
     * closer-to-q comparison prune (a tie is "not closer"). */
-  private def selectHeuristic(vecs: Array[Array[Float]],
+  private def selectHeuristic(vecs: Array[Array[Float]], norms: Array[Double],
                               links: Array[Array[Array[Int]]],
-                              q: Array[Float], cand: Seq[(Double, Int)],
+                              q: Array[Float], qn: Double, cand: Seq[(Double, Int)],
                               max: Int, level: Int,
                               extend: Boolean): Array[Int] = {
     val ord = Ordering.Tuple2[Double, Int]
@@ -198,7 +206,7 @@ object Hnsw {
         var i = 0
         while (i < nbrs.length) {
           val n = nbrs(i)
-          if (seen.add(n)) w.add((dist(q, vecs(n)), n))
+          if (seen.add(n)) w.add((dist(q, qn, vecs(n), norms(n)), n))
           i += 1
         }
       }
@@ -210,7 +218,7 @@ object Hnsw {
       val (d, e) = it.next()
       var ok = true; var j = 0
       while (ok && j < r.length) {
-        if (dist(vecs(e), vecs(r(j))) <= d) ok = false
+        if (dist(vecs(e), norms(e), vecs(r(j)), norms(r(j))) <= d) ok = false
         j += 1
       }
       if (ok) r += e else pruned += ((d, e))
@@ -237,27 +245,29 @@ object Hnsw {
     // entry/maxLevel fields here are snapshots, tracked in the locals
     val g = Graph(ids, vecs, levels, links, entry, maxLevel, m,
       efConstruction, seed, heuristic)
+    val norms = g.norms
 
     def maxAt(level: Int) = if (level == 0) maxM0 else m
 
     var i = start
     while (i < n) {
       val q = vecs(i)
+      val qn = norms(i)
       val l = levels(i)
       // 1. greedy descent on levels above l (ef = 1)
-      var ep = beamOf(entry, dist(q, vecs(entry)))
+      var ep = beamOf(entry, dist(q, qn, vecs(entry), norms(entry)))
       var lc = maxLevel
       while (lc > l) {
-        ep = searchLayer(g, q, ep, 1, lc).head
+        ep = searchLayer(g, q, qn, ep, 1, lc).head
         lc -= 1
       }
       // 2. insert at levels min(l, maxLevel) .. 0
       lc = math.min(l, maxLevel)
       while (lc >= 0) {
-        val cand = searchLayer(g, q, ep, efConstruction, lc)
+        val cand = searchLayer(g, q, qn, ep, efConstruction, lc)
         val selected: Seq[Int] =
           if (heuristic)
-            selectHeuristic(vecs, links, q, cand.pairs, maxAt(lc), lc,
+            selectHeuristic(vecs, norms, links, q, qn, cand.pairs, maxAt(lc), lc,
               extend = true).toSeq
           else cand.nodes.take(maxAt(lc)).toSeq
         links(i)(lc) = selected.toArray
@@ -269,14 +279,14 @@ object Hnsw {
           links(nb)(lc) =
             if (merged.length <= maxAt(lc)) merged
             else if (heuristic)
-              selectHeuristic(vecs, links, vecs(nb),
-                merged.map(x => (dist(vecs(nb), vecs(x)), x))
+              selectHeuristic(vecs, norms, links, vecs(nb), norms(nb),
+                merged.map(x => (dist(vecs(nb), norms(nb), vecs(x), norms(x)), x))
                   .sortBy(identity).toSeq,
                 maxAt(lc), lc, extend = false)
             else {
               // keep the maxAt nearest by (dist, node), ascending
               val keep = new TopK(maxRoot = true, maxAt(lc))
-              merged.foreach(x => keep.offer(dist(vecs(nb), vecs(x)), x, x))
+              merged.foreach(x => keep.offer(dist(vecs(nb), norms(nb), vecs(x), norms(x)), x, x))
               keep.sortAscending()
               Array.tabulate(keep.size)(keep.row)
             }
@@ -391,14 +401,16 @@ object Hnsw {
   private[graft] def searchFinite(g: Graph, query: Array[Float], efSearch: Int,
                                   topK: Int, dropId: Option[Long],
                                   allow: Option[Int => Boolean]): Seq[(Long, Double)] = {
-    var ep = beamOf(g.entry, dist(query, g.vecs(g.entry)))
+    val norms = g.norms
+    val qn = norm(query)
+    var ep = beamOf(g.entry, dist(query, qn, g.vecs(g.entry), norms(g.entry)))
     var lc = g.maxLevel
     while (lc > 0) {
-      ep = searchLayer(g, query, ep, 1, lc).head
+      ep = searchLayer(g, query, qn, ep, 1, lc).head
       lc -= 1
     }
     val ef = math.max(efSearch, topK + (if (dropId.isDefined) 1 else 0))
-    val hits = searchLayer(g, query, ep, ef, 0, allow.orNull)
+    val hits = searchLayer(g, query, qn, ep, ef, 0, allow.orNull)
     // top-k by (sim desc, id asc, NaN last) = ascending (−sim, id)
     val top = new TopK(maxRoot = true, math.min(topK, hits.size))
     val drop = dropId.isDefined
@@ -407,7 +419,7 @@ object Hnsw {
     while (i < hits.size) {
       val node = hits.nodes(i)
       if (!(drop && g.ids(node) == dropped)) {
-        val c = cosine(query, g.vecs(node))
+        val c = cosine(query, qn, g.vecs(node), norms(node))
         val sim =
           if (c.isNaN) Double.NaN
           else java.math.BigDecimal.valueOf(c * 1e6)

@@ -49,7 +49,7 @@ object StreamingQueries {
     * longs). Only safe when `body` EXECUTES its reads eagerly; the
     * staging write below does. */
   private def withNanosAsLong[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.getOption(NanosKey)
+    val prev = s.conf.getAll.get(NanosKey) // explicit value only, so None really unsets
     s.conf.set(NanosKey, "true")
     try body
     finally prev match {

@@ -1,25 +1,26 @@
 package graft.serve
 
-import java.net.{InetSocketAddress, URI}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.net.URI
 import java.time.{Instant, LocalDateTime, ZoneOffset}
-import java.util.concurrent.Executors
 import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
 
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
 
 /** HTTP serving shell over the driver-local scorer — the engine-side
   * twin of the reference's FastAPI surface (`api/main.py:100-404`):
   * `POST /score`, `POST /score/batch`, `GET /health`, `GET /stats`,
-  * `GET /models`, `GET /api-info`. Built on the JDK's own
-  * `com.sun.net.httpserver` (zero added dependencies) and Jackson from
-  * the Spark classpath.
+  * `GET /models`, `GET /api-info`, plus `/score/sequence` and
+  * `/ann/search`. Served by [[HttpEdge]], a blocking HTTP/1.1 edge with
+  * one thread per connection that runs the handler on the thread that
+  * read the request (no added dependencies), and Jackson from the Spark
+  * classpath. The edge bounds what it reads (body, header block, open
+  * connections) and answers 400/411/413/431/503 itself; the handlers
+  * here own every other status (404/405/422/500/502/503/504).
   *
   * Design: the hot path (`/score`) touches NOTHING distributed — it is
   * `LocalScorer.score`, plain Scala at ~microsecond latency, which
@@ -31,21 +32,11 @@ import org.apache.spark.sql.SparkSession
   * Running stats (`prediction_count`, `total_latency`,
   * `api/main.py:30-32`) use `LongAdder`/`DoubleAdder` — the same
   * observable surface as the reference's module globals, but actually
-  * safe under the server's thread pool (the reference's `+=` on a
+  * safe under the server's connection threads (the reference's `+=` on a
   * global is racy under concurrent workers; parity of semantics, not
   * of the race).
   */
 object HttpApi {
-
-  // TCP_NODELAY on accepted sockets (read once at the JDK server's
-  // class init, so it must be set before the first HttpServer.create):
-  // the default Nagle+delayed-ACK interaction costs ~40 ms per
-  // request on the header-then-body write pattern — q142's 200-request
-  // loop measured ~48 ms/request without it vs ~1 ms with it. Every
-  // real serving deployment sets this; setProperty only if the
-  // operator hasn't chosen a value.
-  if (System.getProperty("sun.net.httpserver.nodelay") == null)
-    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   private val mapper = new ObjectMapper()
 
@@ -80,8 +71,7 @@ object HttpApi {
         .toSeq.sortBy(_.name)
     }
 
-  final class Server private[HttpApi] (srv: HttpServer,
-                                       pool: java.util.concurrent.ExecutorService,
+  final class Server private[HttpApi] (edge: HttpEdge.Edge,
                                        val inventory: () => Seq[ModelInfo],
                                        val model: Option[(String, Transaction => Double)],
                                        val seqModel: Option[(String, Seq[Transaction] => Double)],
@@ -96,11 +86,10 @@ object HttpApi {
     private[HttpApi] val hedgeCount = new LongAdder
     private[HttpApi] val predictionCount = new LongAdder
     private[HttpApi] val totalLatencyMs = new DoubleAdder
-    def port: Int = srv.getAddress.getPort
-    // the pool's threads are non-daemon: without the shutdown the JVM
-    // never exits after main returns (a batch job that serves and stops
-    // would hang forever)
-    def stop(): Unit = { srv.stop(0); pool.shutdown() }
+    def port: Int = edge.port
+    /** Close the listening socket and every open connection, and wait
+      * for the edge's threads to end (they are daemons either way). */
+    def stop(): Unit = edge.stop()
   }
 
   /** Start the API on `port` (0 = ephemeral). Caller owns the returned
@@ -115,7 +104,6 @@ object HttpApi {
     * without one it serves heuristic-only, as before. */
   def start(port: Int = 0,
             inventory: () => Seq[ModelInfo] = () => Seq.empty,
-            nThreads: Int = 8,
             model: Option[(String, Transaction => Double)] = None,
             seqModel: Option[(String, Seq[Transaction] => Double)] = None,
             annModel: Option[(String, LocalAnn.Index)] = None,
@@ -166,25 +154,19 @@ object HttpApi {
       require(shards.map(_.family).distinct.length == 1,
         s"ann index '$n' mixes families ${shards.map(_.family).distinct.mkString(", ")}")
     }
-    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val edge = HttpEdge.bind(port)
     // a route whose upstream is THIS server would scatter to itself and
-    // recurse until the fixed handler pool exhausts (round-18 advice) —
+    // recurse until the connection cap is exhausted (round-18 advice) —
     // the bound port is known here, so the cycle is a startup error, not
     // a per-request hang. (Cycles ACROSS routers stay out of scope.)
-    allRoutes.find(_._2.exists(_.contains(srv.getAddress.getPort))).foreach { case (n, _) =>
-      // release the bound socket before failing startup — stop() on a
-      // NEVER-STARTED HttpServer leaks the bind (JDK quirk), so cycle
-      // start→stop; no context is registered, nothing can be served
-      srv.start(); srv.stop(0)
+    allRoutes.find(_._2.exists(_.contains(edge.port))).foreach { case (n, _) =>
+      edge.stop() // no thread started yet: this only releases the bind
       throw new IllegalArgumentException(
-        s"ann route '$n' lists this server's own port ${srv.getAddress.getPort} as an upstream")
+        s"ann route '$n' lists this server's own port ${edge.port} as an upstream")
     }
-    val pool = Executors.newFixedThreadPool(nThreads)
-    srv.setExecutor(pool)
-    val server = new Server(srv, pool, inventory, model, seqModel, allAnn,
+    val server = new Server(edge, inventory, model, seqModel, allAnn,
       allRoutes, routeTimeoutMs)
-    srv.createContext("/", (ex: HttpExchange) => route(server, ex))
-    srv.start()
+    edge.start(ex => route(server, ex))
     server
   }
 
@@ -350,11 +332,11 @@ object HttpApi {
 
   // ---- routing ------------------------------------------------------
 
-  private def route(s: Server, ex: HttpExchange): Unit =
+  private def route(s: Server, ex: HttpEdge.Exchange): Unit =
     try {
-      val path = ex.getRequestURI.getPath
-      val get = ex.getRequestMethod == "GET"
-      val post = ex.getRequestMethod == "POST"
+      val path = ex.path
+      val get = ex.method == "GET"
+      val post = ex.method == "POST"
       (path, get, post) match {
         case ("/health", true, _)      => respond(ex, 200, health(s))
         case ("/api-info", true, _)    => respond(ex, 200, apiInfo(s))
@@ -375,13 +357,11 @@ object HttpApi {
       // surfaced as 500 via this catch) — Jackson's parse/mapping
       // exceptions all extend JacksonException
       case e: com.fasterxml.jackson.core.JacksonException =>
-        Try(respond(ex, 422,
-          err(s"malformed JSON body: ${Option(e.getOriginalMessage).getOrElse(e.getClass.getName)}")))
-        ()
-      case e: Exception => // internal failure must not kill the worker
-        Try(respond(ex, 500, err(Option(e.getMessage).getOrElse(e.getClass.getName))))
-        ()
-    } finally ex.close()
+        respond(ex, 422,
+          err(s"malformed JSON body: ${Option(e.getOriginalMessage).getOrElse(e.getClass.getName)}"))
+      case e: Exception => // an internal failure answers 500; the connection stays open
+        respond(ex, 500, err(Option(e.getMessage).getOrElse(e.getClass.getName)))
+    }
 
   // ---- endpoints ----------------------------------------------------
 
@@ -474,14 +454,14 @@ object HttpApi {
     o
   }
 
-  private def scoreOne(s: Server, ex: HttpExchange): Unit =
-    parseTransaction(mapper.readTree(ex.getRequestBody)) match {
+  private def scoreOne(s: Server, ex: HttpEdge.Exchange): Unit =
+    parseTransaction(mapper.readTree(ex.body)) match {
       case Left(msg) => respond(ex, 422, err(msg))
       case Right(t)  => respond(ex, 200, scoreNode(s, t))
     }
 
-  private def scoreBatch(s: Server, ex: HttpExchange): Unit = {
-    val body = mapper.readTree(ex.getRequestBody)
+  private def scoreBatch(s: Server, ex: HttpEdge.Exchange): Unit = {
+    val body = mapper.readTree(ex.body)
     val txns = body.path("transactions")
     if (!txns.isArray) { respond(ex, 422, err("transactions must be an array")); return }
     val t0 = System.nanoTime()
@@ -507,11 +487,11 @@ object HttpApi {
     * pass emits the fraud probability. 503 when no sequence model is
     * registered (the endpoint exists iff the model family loaded, like
     * the reference's booster-dependent blend). */
-  private def scoreSequence(s: Server, ex: HttpExchange): Unit =
+  private def scoreSequence(s: Server, ex: HttpEdge.Exchange): Unit =
     s.seqModel match {
       case None => respond(ex, 503, err("no sequence model loaded"))
       case Some((name, hook)) =>
-        val body = mapper.readTree(ex.getRequestBody)
+        val body = mapper.readTree(ex.body)
         val txns = body.path("transactions")
         if (!txns.isArray || txns.size() == 0) {
           respond(ex, 422, err("transactions must be a non-empty array")); return
@@ -555,11 +535,11 @@ object HttpApi {
     *
     * Results are bit-identical to the in-process Spark search over the
     * same artifact (LocalAnn's parity contract, gated by q162/q166). */
-  private def annSearch(s: Server, ex: HttpExchange): Unit = {
+  private def annSearch(s: Server, ex: HttpEdge.Exchange): Unit = {
     if (s.annModels.isEmpty && s.annRoutes.isEmpty) {
       respond(ex, 503, err("no ann index loaded")); return
     }
-    val body = mapper.readTree(ex.getRequestBody)
+    val body = mapper.readTree(ex.body)
     val modelNode = body.path("model")
     // routed names resolve FIRST: the router holds no index, it
     // scatter-gathers the request over its upstream shard servers
@@ -701,7 +681,7 @@ object HttpApi {
     * whole request loudly). In-JVM the upstreams are ports; nothing in
     * the protocol knows or cares whether they are processes or hosts —
     * this IS the wire topology of a vector-DB fleet. */
-  private def routerSearch(s: Server, ex: HttpExchange, name: String,
+  private def routerSearch(s: Server, ex: HttpEdge.Exchange, name: String,
                            shards: Seq[Seq[Int]], body: JsonNode): Unit = {
     val topK = body.path("top_k").asInt(5)
     if (topK < 1) { respond(ex, 422, err("top_k must be >= 1")); return }
@@ -881,11 +861,6 @@ object HttpApi {
     val o = mapper.createObjectNode(); o.put("detail", msg); o
   }
 
-  private def respond(ex: HttpExchange, code: Int, body: JsonNode): Unit = {
-    val bytes = mapper.writeValueAsBytes(body)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
+  private def respond(ex: HttpEdge.Exchange, code: Int, body: JsonNode): Unit =
+    ex.respond(code, mapper.writeValueAsBytes(body))
 }

@@ -1,8 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the harness star schema (TESTDATA.md).
   *
@@ -10,10 +12,50 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * them as-is (Parquet self-describes; Catalyst prunes columns and pushes
   * predicates into the scan). At cluster scale the same loaders work on a
   * directory of many files — nothing here assumes a single file.
+  *
+  * Schema inference is a one-task Spark job per `spark.read.parquet`, and
+  * a features pass reads the same tables over and over, so the inferred
+  * schema is kept per table version and the read is given it
+  * (`.schema(s)`, no job). A version is the path, each leaf file's
+  * (path, length, mtime) and the session's explicitly set
+  * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` values (the confs
+  * that change what inference returns, e.g. nanosAsLong in [[events]]);
+  * a rewritten file or a changed conf infers again.
   */
 object Tables {
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type Files = Seq[(String, Long, Long)]
+  private val schemas = new ConcurrentHashMap[(String, Seq[(String, String)]), (Files, StructType)]()
+
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val files = leafFiles(spark, path)
+    if (files.isEmpty) return spark.read.parquet(path) // let Spark report a missing table
+    val key = (path, spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted)
+    val schema = schemas.get(key) match {
+      case (fs, s) if fs == files => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (files, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Every file under `path` (itself when it is a file), sorted. */
+  private def leafFiles(spark: SparkSession, path: String): Files = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return Nil
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "orders")
@@ -52,7 +94,9 @@ object Tables {
     * It is a no-op for the µs-NTZ encoding. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
+    // getAll holds only explicitly set values; getOption would turn an
+    // unset key into an explicit default and change the schema memo key
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, "true")
     try normalizeTs(read(spark, dir, "events"))
     finally prev match {
