@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR — k=3 back-to-back runs per query, median of record,
@@ -15,17 +14,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parse once, fail fast: a non-numeric override (typo, "auto") must
-    // die here, not silently emit invalid JSON in the one-line record
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local()
     spark.range(1000000L).selectExpr("sum(id)").collect() // JVM/codegen warm-up
 
     // optional local-iteration filter: `runMain graft.Bench q62 q58` times

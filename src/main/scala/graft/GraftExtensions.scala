@@ -5,16 +5,16 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{BloomMightContainExpr, BloomSketch, FloatDotProduct, SimHash32, SortedLongIntersectCount, TokenClassCounts}
 
-/** SparkSessionExtensions hook (SURVEY.md §4.4): registers the engine's
-  * native codegen expressions as permanent SQL functions at session
-  * build time, so `spark.sql("SELECT float_dot(a, b) ...")` works with
-  * no imperative NativeVector.register call — the idiomatic packaging
-  * for a Spark-native library (`--conf spark.sql.extensions=
-  * graft.GraftExtensions` on any cluster).
+/** SparkSessionExtensions hook (SURVEY.md §4.4): the SQL-name route to
+  * the engine's native codegen expressions. With `--conf
+  * spark.sql.extensions=graft.GraftExtensions` on any cluster, a session
+  * resolves `spark.sql("SELECT float_dot(a, b) ...")` and four more
+  * permanent functions.
   *
-  * The temp-function path (NativeVector.register) stays for sessions
-  * built without extensions; both routes resolve to the same Expression
-  * classes, so results are identical by construction.
+  * The engine's own operators never go through these names: the
+  * `NativeVector`/`BloomSketch` Column helpers build the same Expression
+  * classes directly, so both routes give identical results by
+  * construction.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.Expression

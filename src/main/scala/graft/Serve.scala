@@ -72,14 +72,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_train/registry")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val server = build(spark, root, port)
     println(s"[serve] fraud-detection API on http://127.0.0.1:${server.port} " +
       s"(registry: $root, model: ${server.model.map(_._1).getOrElse("Heuristic")})")

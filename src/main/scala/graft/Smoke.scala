@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Smoke-check main: runs SparkEntry.entry (the flagship pipeline on
   * sf0.001) and prints row count + a sample — mirrors the driver's t1. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.select("event_id", "user_id", "value", "cum_sum", "cum_mean",

@@ -28,15 +28,7 @@ object TrainPipeline {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_train"
     val n = if (args.length > 1) args(1).toLong else 50000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     run(spark, outDir, n)
     spark.stop()
   }

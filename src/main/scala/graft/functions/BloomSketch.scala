@@ -4,9 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.Cols.{expr, of}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -99,5 +99,5 @@ object BloomSketch {
   /** Column form: true iff `value` MIGHT be in the sketched set (never
     * false for a true member). */
   def mightContain(value: Column, bloomBytes: Array[Byte]): Column =
-    call_function(FnName, value, lit(bloomBytes))
+    of(BloomMightContainExpr(expr(value), Literal(bloomBytes)))
 }

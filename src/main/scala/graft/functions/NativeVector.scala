@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for float-vector dot product.
@@ -879,71 +878,26 @@ object BqPackWords {
 }
 
 object NativeVector {
-  val FnName = "float_dot"
-  val IntersectFnName = "sorted_long_intersect"
-  val SimHashFnName = "simhash32"
-  val TokenClassFnName = "token_class_counts"
-  val NgramStatsFnName = "ngram_stats"
-  val BpeMergeFnName = "bpe_merge"
-  val BpeApplyFnName = "bpe_apply"
-  val PqEncodeFnName = "pq_encode"
-  val BqPackFnName = "bq_pack"
+  import org.apache.spark.sql.graft.Cols.{expr, of}
 
-  /** Register once per session; then `dot`/`sortedIntersect` resolve to
-    * the native expressions through the function registry. Arity is
-    * checked up front so a wrong-arity SQL call fails with a message,
-    * not an IndexOutOfBoundsException. */
-  def register(spark: SparkSession): Unit = {
-    def checked(name: String, arity: Int)(build: Seq[Expression] => Expression)
-        : Seq[Expression] => Expression = exprs => {
-      require(exprs.length == arity,
-        s"$name takes exactly $arity argument(s), got ${exprs.length}")
-      build(exprs)
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, checked(FnName, 2)(e => FloatDotProduct(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      IntersectFnName, checked(IntersectFnName, 2)(e => SortedLongIntersectCount(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimHashFnName, checked(SimHashFnName, 1)(e => SimHash32(e.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BloomSketch.FnName, checked(BloomSketch.FnName, 2)(
-        e => BloomMightContainExpr(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TokenClassFnName, checked(TokenClassFnName, 1)(
-        e => TokenClassCounts(e.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NgramStatsFnName, checked(NgramStatsFnName, 2)(
-        e => NgramStats(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BpeMergeFnName, checked(BpeMergeFnName, 3)(
-        e => BpeMergePair(e(0), e(1), e(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BpeApplyFnName, checked(BpeApplyFnName, 2)(
-        e => BpeApply(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PqEncodeFnName, checked(PqEncodeFnName, 2)(
-        e => PqEncodeCodes(e(0), e(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BqPackFnName, checked(BqPackFnName, 2)(
-        e => BqPackWords(e(0), e(1))), "built-in")
-  }
-
-  def dot(a: Column, b: Column): Column = call_function(FnName, a, b)
+  /** Column forms of the native expressions, built directly: no
+    * function-registry lookup, so the caller's session is left as is.
+    * `GraftExtensions` is the separate SQL-name route. */
+  def dot(a: Column, b: Column): Column = of(FloatDotProduct(expr(a), expr(b)))
   def sortedIntersect(a: Column, b: Column): Column =
-    call_function(IntersectFnName, a, b)
-  def simhash32(a: Column): Column = call_function(SimHashFnName, a)
-  def tokenClassCounts(a: Column): Column = call_function(TokenClassFnName, a)
+    of(SortedLongIntersectCount(expr(a), expr(b)))
+  def simhash32(a: Column): Column = of(SimHash32(expr(a)))
+  def tokenClassCounts(a: Column): Column = of(TokenClassCounts(expr(a)))
   def ngramStats(toks: Column, n: Int): Column =
-    call_function(NgramStatsFnName, toks, org.apache.spark.sql.functions.lit(n))
+    of(NgramStats(expr(toks), Literal(n)))
   def bpeMerge(syms: Column, a: Column, b: Column): Column =
-    call_function(BpeMergeFnName, syms, a, b)
+    of(BpeMergePair(expr(syms), expr(a), expr(b)))
   def bpeApply(syms: Column, merges: Column): Column =
-    call_function(BpeApplyFnName, syms, merges)
+    of(BpeApply(expr(syms), expr(merges)))
   def pqEncode(vec: Column, centers: Column): Column =
-    call_function(PqEncodeFnName, vec, centers)
+    of(PqEncodeCodes(expr(vec), expr(centers)))
   def bqPack(vec: Column, planes: Column): Column =
-    call_function(BqPackFnName, vec, planes)
+    of(BqPackWords(expr(vec), expr(planes)))
 
   /** cos(a,b) from raw float arrays: dot/(‖a‖·‖b‖), every norm evaluated
     * once per row via the native dot. THE single cosine form — Embeddings

@@ -53,8 +53,6 @@ object Bpe {
     *    previous one dropped only after its successor materializes. */
   def train(docs: DataFrame, text: String, numMerges: Int,
             localThreshold: Long = 100000L, batchSize: Int = 16): Seq[Merge] = {
-    val spark = docs.sparkSession
-    NativeVector.register(spark)
     val hist = wordHistogram(docs, text).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       if (hist.count() <= localThreshold) {
@@ -325,8 +323,6 @@ object Bpe {
     * document, empty tokens for wordless text. */
   def tokenizeCorpus(docs: DataFrame, id: String, text: String,
                      merges: Seq[Merge]): DataFrame = {
-    val spark = docs.sparkSession
-    NativeVector.register(spark)
     val mergesLit = typedLit(merges.sortBy(_.rank).map(m => (m.left, m.right)))
       .cast("array<struct<a:string,b:string>>")
     val words = docs
@@ -355,8 +351,6 @@ object Bpe {
     * corpus frequency) by replaying the merge table over the word
     * histogram — the artifact a tokenizer ships. */
   def vocabulary(docs: DataFrame, text: String, merges: Seq[Merge]): DataFrame = {
-    val spark = docs.sparkSession
-    NativeVector.register(spark)
     val words = withSyms(wordHistogram(docs, text))
     val merged = merges.foldLeft(words) {
       case (df, m) =>

@@ -69,7 +69,6 @@ object Bq {
     * re-attempted (and re-failed) the giant compile and the scan ran
     * INTERPRETED. Bit-identical by BqSpec's expression-parity test. */
   def encode(df: DataFrame, vec: String, q: Quantizer): DataFrame = {
-    NativeVector.register(df.sparkSession)
     df.withColumn("bq_codes", NativeVector.bqPack(col(vec),
       typedlit(q.planes.map(_.toSeq).toSeq)))
   }
@@ -105,7 +104,6 @@ object Bq {
                      q: Quantizer, queries: DataFrame,
                      qid: String, qvec: String, shortlist: Int, topK: Int,
                      dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val corpus = encoded
       .select(col(id).as("neighbor_id"), col("bq_codes"))
       .filter(col("bq_codes").isNotNull)
@@ -144,7 +142,6 @@ object Bq {
                        q: Quantizer, queries: DataFrame,
                        qid: String, qvec: String, topK: Int,
                        dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val corpus = encoded
       .filter(col("bq_codes").isNotNull)
       .select(col(id).as("neighbor_id"), col(vec).as("__nv"))

@@ -170,7 +170,6 @@ object Curation {
   def contaminationBloom(docs: DataFrame, id: String, text: String,
                          evalGrams: DataFrame, shingleLen: Int,
                          fpp: Double = 0.01): DataFrame = {
-    graft.functions.NativeVector.register(docs.sparkSession)
     // persist the (small) eval side ONCE: the sizing count, the sketch
     // build, and the verify join all read the same cache — unpersisted,
     // the eval lineage (often itself a tokenize+shingle pipeline, q108)

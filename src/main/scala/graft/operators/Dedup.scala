@@ -189,7 +189,6 @@ object Dedup {
   def simHashPairs(docs: DataFrame, id: String, text: String,
                    blockKey: String, maxDist: Int,
                    maxBlockSize: Int = 10000): DataFrame = {
-    graft.functions.NativeVector.register(docs.sparkSession)
     val sig = docs
       .select(col(blockKey).as("bk"), col(id).as("doc_id"),
         transform(TextOps.tokens(col(text)), t => xxhash64(t)).as("__th"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeVector
+
 /** Embedding-vector operators: norms, brute-force cosine top-k, and a
   * random-hyperplane LSH variant as the scale path (SURVEY.md §7).
   *
@@ -33,20 +35,6 @@ object Embeddings {
       array_max(v).cast("double").as("max_v"))
   }
 
-  /** Brute-force cosine top-k: for each query vector, the k nearest
-    * corpus vectors (self excluded). Queries are broadcast; ranking
-    * shuffles only (query_id, sim) pairs. `quantize` stabilizes ranking
-    * ties across engines/runs. */
-  /** Cosine via the native codegen'd dot expression (4× the higher-order
-    * fold on pairwise workloads; identical accumulation order, so results
-    * are bit-equal). One shared form for every similarity path —
-    * NativeVector.cosine. Registration is per session and idempotent. */
-  private def nativeCosine(spark: org.apache.spark.sql.SparkSession,
-                           a: Column, b: Column): Column = {
-    graft.functions.NativeVector.register(spark)
-    graft.functions.NativeVector.cosine(a, b)
-  }
-
   /** EXACT cosine threshold pairs restricted to a bounded PROBE set:
     * probes broadcast against the corpus — a linear scan (|probes|·n
     * cosines), no LSH, no n². This is the recall yardstick for the
@@ -63,7 +51,7 @@ object Embeddings {
     val c = corpus.select(col(id).as("cid"), col(vec).as("cv"))
     c.join(broadcast(p), col("pid") =!= col("cid"))
       .withColumn("sim",
-        round(nativeCosine(corpus.sparkSession, col("pv"), col("cv")) * 1e6) / 1e6)
+        round(NativeVector.cosine(col("pv"), col("cv")) * 1e6) / 1e6)
       .filter(col("sim") >= minSim)
       .select(least(col("pid"), col("cid")).as("id1"),
         greatest(col("pid"), col("cid")).as("id2"), col("sim"))
@@ -103,18 +91,22 @@ object Embeddings {
       // convention (cosineProbePairs/lshNeighborPairs apply the same),
       // so the threshold cut and emitted sims are run-stable
       .withColumn("sim",
-        round(nativeCosine(df.sparkSession, col("v1"), col("v2")) * 1e6) / 1e6)
+        round(NativeVector.cosine(col("v1"), col("v2")) * 1e6) / 1e6)
       .filter(col("sim") >= minSim)
       .select(col("id1"), col("id2"), col("sim"))
   }
 
+  /** Brute-force cosine top-k: for each query vector, the k nearest
+    * corpus vectors (self excluded). Queries are broadcast; ranking
+    * shuffles only (query_id, sim) pairs. `quantize` stabilizes ranking
+    * ties across engines/runs. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, qid: String,
                  cid: String, vec: String, k: Int): DataFrame = {
     val q = queries.select(col(qid).as("query_id"), col(vec).as("qv"))
     val c = corpus.select(col(cid).as("neighbor_id"), col(vec).as("cv"))
     val sims = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .withColumn("sim",
-        round(nativeCosine(corpus.sparkSession, col("qv"), col("cv")) * 1e6) / 1e6)
+        round(NativeVector.cosine(col("qv"), col("cv")) * 1e6) / 1e6)
     // round-20: the final rank rides the k-bounded aggregate instead of
     // a row_number window — the window shuffled and SORTED every scored
     // (query × corpus) pair; the aggregate ships k-sized buffers. Same
@@ -184,7 +176,7 @@ object Embeddings {
     l.join(r, Seq("bucket"))
       .filter(col("id1") < col("id2"))
       .withColumn("sim",
-        round(nativeCosine(df.sparkSession, col("v1"), col("v2")) * 1e6) / 1e6)
+        round(NativeVector.cosine(col("v1"), col("v2")) * 1e6) / 1e6)
       .filter(col("sim") >= minSim)
       .select("id1", "id2", "sim")
   }
@@ -228,7 +220,7 @@ object Embeddings {
       .join(base.select(col("vid").as("id1"), col("v").as("v1")), Seq("id1"))
       .join(base.select(col("vid").as("id2"), col("v").as("v2")), Seq("id2"))
       .withColumn("sim",
-        round(nativeCosine(df.sparkSession, col("v1"), col("v2")) * 1e6) / 1e6)
+        round(NativeVector.cosine(col("v1"), col("v2")) * 1e6) / 1e6)
       .filter(col("sim") >= minSim)
       .select("id1", "id2", "sim")
   }

@@ -55,8 +55,6 @@ object Ivf {
     * an array_sort comparator, top-r exploded. Non-finite vectors park
     * in cell −1 exactly once (never duplicated, never probed). */
   def assignedTopR(index: Index, r: Int): DataFrame = {
-    val spark = index.assigned.sparkSession
-    NativeVector.register(spark)
     val cents: Seq[(Int, Seq[Float])] = index.centroids.collect()
       .map(row => row.getInt(0) -> row.getAs[scala.collection.Seq[Float]](1).toSeq.toSeq)
       .toSeq.sortBy(_._1)
@@ -169,7 +167,6 @@ object Ivf {
   private def trainCentroids(df: DataFrame, id: String, vec: String,
                              nLists: Int, seed: Long, maxIter: Int,
                              maxTrainRows: Int): Array[Array[Float]] = {
-    NativeVector.register(df.sparkSession)
     val sample: Array[Array[Float]] = Samples.hashTopN(
         df.filter(allFinite(col(vec))), // a NaN point would poison k-means
         id, Seq(col(vec)), maxTrainRows)
@@ -191,7 +188,6 @@ object Ivf {
   private def assemble(df: DataFrame, id: String, vec: String,
                        centers: Array[Array[Float]]): Index = {
     val spark = df.sparkSession
-    NativeVector.register(spark)
     // map-side assignment on RAW vectors: centroids are unit, ‖v‖ is a
     // positive per-row constant, so argmax dot == argmax cosine.
     // array_position takes the first maximum — ties break
@@ -497,7 +493,6 @@ object Ivf {
     * probed cell. */
   def probeCells(index: Index, queries: DataFrame, qid: String,
                  vec: String, nProbe: Int): DataFrame = {
-    NativeVector.register(queries.sparkSession)
     val q = queries.select(col(qid).as("query_id"), col(vec).as("qv"))
     val wProbe = Window.partitionBy("query_id").orderBy(desc("csim"), col("centroid_id"))
     q.crossJoin(broadcast(index.centroids))
@@ -580,7 +575,6 @@ object Ivf {
     * corpus. */
   private def scanProbed(index: Index, probes: DataFrame,
                          topK: Int): DataFrame = {
-    NativeVector.register(index.assigned.sparkSession)
     val scored = probes.join(index.assigned, Seq("centroid_id"))
       .withColumnRenamed(index.idCol, "neighbor_id")
       .filter(col("neighbor_id") =!= col("query_id"))

@@ -248,7 +248,6 @@ object Pq {
     * adcRank drops parked rows, making them unsearchable BY CONTRACT,
     * never silently ranked. */
   def encode(df: DataFrame, vec: String, cb: Codebooks): DataFrame = {
-    NativeVector.register(df.sparkSession) // unitize needs float_dot resolvable
     encodeStaged(df.withColumn("__unit", unitize(col(vec))), cb)
   }
 
@@ -266,7 +265,6 @@ object Pq {
     * expression was GC-bound (BASELINE round-16: the encode cache sat
     * at 32 saturated cores without finishing; native = minutes). */
   private def encodeStaged(staged: DataFrame, cb: Codebooks): DataFrame = {
-    NativeVector.register(staged.sparkSession)
     val centLit = typedLit(cb.centers.map(_.map(_.toSeq).toSeq).toSeq)
       .cast("array<array<array<float>>>")
     staged
@@ -571,7 +569,6 @@ object Pq {
                        queries: DataFrame, qid: String, qvec: String,
                        topK: Int, dropSelf: Boolean = false,
                        queryDim: Option[Int] = None): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val corpus = encoded
       .filter(!parked)
       .select(col(id).as("neighbor_id"), col(vec).as("__nv"))
@@ -644,7 +641,6 @@ object Pq {
                         queries: DataFrame, qid: String, qvec: String,
                         nProbe: Int, shortlist: Int, topK: Int,
                         dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(queries.sparkSession)
     val q = queries.select(col(qid).cast("long").as("query_id"), col(qvec).as("qv"))
     val wProbe = Window.partitionBy("query_id")
       .orderBy(desc("csim"), col("centroid_id"))
@@ -723,7 +719,6 @@ object Pq {
     * contract as encode(). */
   def encodeResidual(index: Ivf.Index, cb: Codebooks,
                      rAssign: Int = 1): DataFrame = {
-    NativeVector.register(index.assigned.sparkSession)
     // rAssign > 1: multiple assignment (Ivf.assignedTopR) — each vector
     // is coded under its top-r cells, residual per OWN cell, so a probe
     // of any of them finds it; searchers dedup before re-rank
@@ -784,7 +779,6 @@ object Pq {
                                 qid: String, qvec: String,
                                 nProbe: Int, shortlist: Int, topK: Int,
                                 dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(queries.sparkSession)
     val q = queries.select(col(qid).cast("long").as("query_id"), col(qvec).as("qv"))
     val wProbe = Window.partitionBy("query_id")
       .orderBy(desc("csim"), col("centroid_id"))

@@ -108,7 +108,6 @@ object Sq {
                      qid: String, qvec: String, shortlist: Int, topK: Int,
                      dropSelf: Boolean = false,
                      shortlistViaAgg: Boolean = true): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val corpus = encoded
       .select(col(id).as("neighbor_id"),
         decodeCol(col("sq_codes"), q).as("__dec"))
@@ -163,7 +162,6 @@ object Sq {
                        q: Quantizer, queries: DataFrame,
                        qid: String, qvec: String, topK: Int,
                        dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val corpus = encoded
       .select(col(id).as("neighbor_id"), col(vec).as("__nv"),
         decodeCol(col("sq_codes"), q).as("__dec"))
@@ -198,7 +196,6 @@ object Sq {
                           queries: DataFrame, qid: String, qvec: String,
                           nProbe: Int, topK: Int,
                           dropSelf: Boolean = false): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     // wrong-width queries drop (same rationale as [[searchExhaustive]]:
     // never fabricate null-sim rows; the reranked form throws on them)
     val qdf = queries.select(col(qid).cast("long").as("query_id"),
@@ -245,7 +242,6 @@ object Sq {
                         nProbe: Int, shortlist: Int, topK: Int,
                         dropSelf: Boolean = false,
                         shortlistViaAgg: Boolean = true): DataFrame = {
-    NativeVector.register(encoded.sparkSession)
     val qdf = queries.select(col(qid).cast("long").as("query_id"),
       col(qvec).as("__qv"))
     val wProbe = Window.partitionBy("query_id")
@@ -331,7 +327,6 @@ object Sq {
                          qvec: String, efSearch: Int, shortlist: Int,
                          topK: Int, dropSelf: Boolean = true): DataFrame = {
     val spark = encoded.sparkSession
-    NativeVector.register(spark)
     import spark.implicits._
     val qs = queries.select(col(qid).cast("long"), col(qvec)).collect()
       .map(r => r.getLong(0) -> r.getAs[scala.collection.Seq[Float]](1).toArray)

@@ -121,7 +121,6 @@ object TextOps {
     //  4. |A∪B| = |A|+|B|−|A∩B|;
     //  5. size-ratio prefilter: jaccard ≥ t ⟹ min(n1,n2) ≥ t·max(n1,n2).
     require(lshK % lshBands == 0, s"lshK=$lshK must be divisible by lshBands=$lshBands")
-    graft.functions.NativeVector.register(docs.sparkSession)
     val toks = array_sort(array_distinct(transform(tokens(col(text)), t => xxhash64(t))))
     // tokenize runs per REFERENCE of `base` (4-6× here) and each pass is
     // CPU-bound — widen a narrow scan so the passes parallelize
@@ -188,7 +187,6 @@ object TextOps {
   def repetitionSignals(docs: DataFrame, id: String, text: String,
                         ns: Seq[Int] = Seq(2, 3)): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 1), s"bad gram orders $ns")
-    graft.functions.NativeVector.register(docs.sparkSession)
     // __-prefixed internals (repo convention for staged columns): a
     // caller frame carrying its own "toks" must not collide.
     // The statistics are strictly per-document, so the scalable shape is

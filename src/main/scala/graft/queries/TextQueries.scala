@@ -97,7 +97,6 @@ object TextQueries {
     // The DuckDB oracle still computes the regexp_count truth, so the
     // gate proves loop ≡ regex class by class on the whole corpus.
     "q60_token_classes" -> ((s, dir) => {
-      graft.functions.NativeVector.register(s)
       val t = col("text")
       Tables.documents(s, dir)
         .select(col("doc_id"), TextOps.nTokens(t).cast("long").as("n_ws_tokens"),

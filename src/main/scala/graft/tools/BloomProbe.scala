@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.BloomSketch
@@ -36,11 +35,7 @@ object BloomProbe {
   def main(args: Array[String]): Unit = {
     val nCorpus = args.headOption.map(_.toLong).getOrElse(50000000L)
     val nEval = if (args.length > 1) args(1).toLong else 2000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val shuffleBytes = new LongAdder
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -82,7 +77,6 @@ object BloomProbe {
     // the bloom path its full cost, including the inventory pass
     timed("bloom build + prefilter + unhinted verify join (the q108 plan)") {
       val bloom = BloomSketch.build(eval, "eg", nEval, 0.01)
-      graft.functions.NativeVector.register(spark)
       val hits = corpus
         .filter(BloomSketch.mightContain(col("g"), bloom))
         .join(eval, col("g") === col("eg")).count()

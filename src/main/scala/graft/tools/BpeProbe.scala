@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
@@ -40,11 +39,7 @@ object BpeProbe {
     val batches = args.lift(2).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 16))
     val vocabBoost = args.lift(3).map(_.toLong).getOrElse(0L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val jobs = new LongAdder
     spark.sparkContext.addSparkListener(new SparkListener {

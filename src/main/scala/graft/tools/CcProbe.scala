@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Scratch probe: time q65's two stages (pair generation vs connected
@@ -8,11 +7,7 @@ import graft.operators.Dedup
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     def t[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r

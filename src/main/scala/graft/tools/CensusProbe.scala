@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.FreqSketchAgg
@@ -31,11 +30,7 @@ import graft.functions.FreqSketchAgg
 object CensusProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val shuffleBytes = new LongAdder

@@ -19,13 +19,7 @@ object FrontierProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000L)
     val nq = if (args.length > 1) args(1).toInt else 50
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val e = graft.sources.SyntheticData
       .clusteredEmbeddings(spark, n).cache()

@@ -15,13 +15,7 @@ import graft.operators.{Embeddings, Hnsw}
 object HnswProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000L
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     def t[A](label: String)(f: => A): (A, Double) = {
       val t0 = System.nanoTime()
       val r = f

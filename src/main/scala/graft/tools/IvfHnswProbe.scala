@@ -30,13 +30,7 @@ object IvfHnswProbe {
     val nlists = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
                  else Seq(1024, 4096, 16384)
     val dim = if (args.length > 2) args(2).toInt else 64
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     // deterministic corpus: per-id hashed floats in [-0.5, 0.5)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale evidence for LeafBoost's DISTRIBUTED histogram branch
@@ -18,11 +17,7 @@ object LeafBoostProbe {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val numTrees = args.lift(1).map(_.toInt).getOrElse(8)
     val numLeaves = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     // synthetic-but-learnable target over real corpus-scale columns:
     // label = (discounted price above a quantity-dependent line)

@@ -10,13 +10,7 @@ import graft.operators.{Embeddings, Opq, Pq}
 object OpqProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), expr(
       "transform(embedding, (x, i) -> CASE WHEN i < 8 THEN x * CAST(3.5 AS FLOAT)" +

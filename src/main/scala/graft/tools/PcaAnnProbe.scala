@@ -1,14 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.{Pca, Embeddings}
 object PcaAnnProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     for (dir <- args) {
       val e0 = Tables.embeddings(spark, dir)
       val e = e0.select(col("vec_id"), expr(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Embeddings, Ivf, Pq}
@@ -22,11 +21,7 @@ object PqProbe {
     val nProbe = args.lift(1).map(_.toInt).getOrElse(8)
     val m = args.lift(2).map(_.toInt).getOrElse(8)
     val shortlist = args.lift(3).map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < 20)

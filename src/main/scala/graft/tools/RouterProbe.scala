@@ -17,13 +17,7 @@ object RouterProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 200
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val e = Tables.embeddings(spark, dir).filter(col("vec_id") < 50000)
     val cb = graft.operators.Pq.train(e, "vec_id", "embedding", m = 8, k = 64)

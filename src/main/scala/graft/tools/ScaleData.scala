@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up replicator for THROUGHPUT benchmarking only (correctness
@@ -35,11 +35,7 @@ object ScaleData {
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     def wanted(t: String): Boolean = only.forall(_.contains(t))
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def replicate(df: DataFrame): DataFrame =
       df.withColumn("__r", explode(sequence(lit(0), lit(copies - 1))))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only skew-evidence probe (round-7 verdict item 7): plant ONE hot
@@ -17,13 +17,9 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/tmp/graft_sf1/events.parquet")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
 
     // plant the hot key: 5x-replicated events (5M rows) with HALF of all
     // rows reassigned to user 1, deterministically by event hash; props

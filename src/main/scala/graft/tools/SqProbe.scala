@@ -13,13 +13,7 @@ import graft.sources.Tables
 object SqProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf5")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding").cache()
     val n = e.count()

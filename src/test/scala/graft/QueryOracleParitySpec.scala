@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Standing form of tools/RegAudit (round-14 verdict #6): the driver's
+/** Queries and oracles stay paired (round-14 verdict #6): the driver's
   * correctness gate compares each `SparkEntry.queries` entry against
   * its `oracleSql` twin — a query registered without an oracle silently
   * downgrades to a rows-only check, and an orphan oracle checks

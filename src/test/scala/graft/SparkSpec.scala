@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for operator specs (mirrors the driver's
-  * session config: UTC, small shuffle partitions, ANSI default). */
+/** Shared local SparkSession for operator specs: the mains' session
+  * (graft.Session) pinned at 4 cores, so test layouts do not depend on
+  * the box. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the shared session alive
@@ -13,13 +14,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -27,7 +27,6 @@ class BloomSketchSpec extends SparkSpec {
   test("no false negatives: every inserted member passes the probe") {
     val members = strings(5000, "m")
     val bloom = BloomSketch.build(members, "s", 5000, 0.01)
-    graft.functions.NativeVector.register(spark)
     val missed = members
       .filter(!BloomSketch.mightContain(col("s"), bloom)).count()
     assert(missed == 0L, s"$missed members rejected — false negatives")
@@ -35,7 +34,6 @@ class BloomSketchSpec extends SparkSpec {
 
   test("false-positive rate stays near nominal on disjoint probes") {
     val bloom = BloomSketch.build(strings(20000, "m"), "s", 20000, 0.01)
-    graft.functions.NativeVector.register(spark)
     // md5("x"+i) never collides with md5("m"+i) inputs — all 40k probes
     // are true non-members; 1% nominal, 3x headroom for hash variance
     val fp = strings(40000, "x")
@@ -44,7 +42,6 @@ class BloomSketchSpec extends SparkSpec {
   }
 
   test("interpreted eval agrees with codegen") {
-    graft.functions.NativeVector.register(spark)
     val bloom = BloomSketch.build(strings(100, "m"), "s", 100, 0.01)
     val expr = BloomMightContainExpr(
       org.apache.spark.sql.catalyst.expressions.Literal.create(

@@ -14,7 +14,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("native dot product is bit-identical to the higher-order fold") {
-    NativeVector.register(spark)
     val pairs = vecs.select($"vid".as("i"), $"v".as("a"))
       .join(vecs.limit(50).select($"vid".as("j"), $"v".as("b")))
     val diff = pairs.select(
@@ -24,7 +23,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("native dot reads array<double> correctly (typed getter, not a float reinterpret)") {
-    NativeVector.register(spark)
     // double inputs once silently mis-read through getFloat — q74's
     // near-dup verify stage surfaced sims of 0.93 for true cosine 0.9999
     val d = vecs.select($"vid", $"v".cast("array<double>").as("v"))
@@ -42,7 +40,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("native sorted intersect equals array_intersect size on sorted distinct arrays") {
-    NativeVector.register(spark)
     val arrs = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)),
       (Seq(1L, 2L), Seq(3L, 4L)),
@@ -56,7 +53,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("native simhash32 equals the higher-order fold signature") {
-    NativeVector.register(spark)
     val docs = Seq("the quick brown fox", "lorem ipsum dolor sit amet", "x")
       .toDF("text")
     val th = transform(graft.operators.TextOps.tokens($"text"), t => xxhash64(t))
@@ -67,7 +63,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("native dot survives whole-stage codegen over a large pair join") {
-    NativeVector.register(spark)
     val pairs = vecs.select($"vid".as("i"), $"v".as("a"))
       .join(vecs.select($"vid".as("j"), $"v".as("b")))
     def time[A](f: => A): (A, Double) = {
@@ -85,7 +80,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("token_class_counts equals the three regexp_counts on adversarial strings") {
-    NativeVector.register(spark)
     // run boundaries, whitespace variants (incl. \x0B vertical tab),
     // non-ASCII (2- and 3-byte UTF-8), empties, class transitions
     val rows = Seq(
@@ -107,7 +101,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("token_class_counts: one fused pass beats three regex scans") {
-    NativeVector.register(spark)
     val docs = spark.range(200000L).select(concat_ws(" ",
       lit("lorem ipsum 42 dolor sit 7 amet!"), col("id").cast("string"),
       lit("consectetur 1337 adipiscing elit, sed do eiusmod tempor."))
@@ -140,7 +133,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("ngram_stats matches brute-force joined-string counting (random docs, both paths)") {
-    NativeVector.register(spark)
     val rnd = new scala.util.Random(11)
     // small vocab forces heavy repetition (exercises top/dup); lengths
     // 0..40 cover len < n clipping and the single-empty-gram case
@@ -163,7 +155,6 @@ class NativeVectorSpec extends SparkSpec {
   }
 
   test("ngram_stats stays inside whole-stage codegen") {
-    NativeVector.register(spark)
     // input must depend on the row (a literal constant-folds at plan
     // time); the expression must live INSIDE a WholeStageCodegen stage,
     // not fall back to interpreted projection
@@ -179,5 +170,33 @@ class NativeVectorSpec extends SparkSpec {
     // "a b a b w0": 2-grams "a b", "b a", "a b", "b w0"
     val r = df.select($"st.total", $"st.distinct", $"st.top").first()
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((4L, 3L, 2L)))
+  }
+
+  test("operators leave the session's function registry untouched") {
+    import graft.operators.{Bpe, Bq, Dedup, Pq, TextOps}
+    val small = vecs.filter($"vid" < 200)
+    val queries = small.filter($"vid" < 5)
+    val cb = Pq.train(small, "vid", "v", m = 8, k = 16)
+    Pq.searchReranked(Pq.encode(small, "v", cb), "vid", "v", cb, queries,
+      "vid", "v", shortlist = 20, topK = 3).collect()
+    val bq = Bq.train(dim = 64, nBits = 64)
+    Bq.searchReranked(Bq.encode(small, "v", bq), "vid", "v", bq, queries,
+      "vid", "v", shortlist = 20, topK = 3).collect()
+    val docs = Seq((1L, "low lower lowest"), (2L, "newer wider low"),
+      (3L, "low lower lowest"), (4L, "")).toDF("doc_id", "text")
+      .withColumn("bk", lit(0))
+    Bpe.tokenizeCorpus(docs, "doc_id", "text",
+      Bpe.train(docs, "text", numMerges = 3)).collect()
+    TextOps.jaccardPairs(docs, "doc_id", "text", "bk", 0.5).collect()
+    TextOps.repetitionSignals(docs, "doc_id", "text").collect()
+    Dedup.simHashPairs(docs, "doc_id", "text", "bk", maxDist = 3).collect()
+    val bloom = BloomSketch.build(docs, "text", 4, 0.01)
+    docs.select(BloomSketch.mightContain($"text", bloom),
+      NativeVector.tokenClassCounts($"text")).collect()
+    val names = Seq("float_dot", "sorted_long_intersect", "simhash32",
+      "bloom_might_contain", "token_class_counts", "ngram_stats",
+      "bpe_merge", "bpe_apply", "pq_encode", "bq_pack")
+    val registered = names.filter(spark.catalog.functionExists)
+    assert(registered.isEmpty, s"operators registered $registered")
   }
 }

@@ -50,7 +50,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpe_merge expression: left-to-right non-overlapping fuse") {
-    NativeVector.register(spark)
     val out = spark.range(1)
       .select(NativeVector.bpeMerge(
         typedLit(Seq("a", "a", "a", "b", "a", "a")), lit("a"), lit("a")).as("m"))
@@ -167,7 +166,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpe_apply == replaying the merge table via chained bpe_merge, on real words") {
-    NativeVector.register(spark)
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val merges = Bpe.train(docs, "text", numMerges = 20)
     val mergesLit = typedLit(merges.map(m => (m.left, m.right)))
@@ -199,7 +197,6 @@ class BpeSpec extends SparkSpec {
     // rank 4 (-> w, xyz), then REVISITS rank 3 (w, xyz) which replay
     // already passed — emitting [wxyz] where replay emits [w, xyz].
     // The monotone-rank constraint must reproduce replay exactly.
-    NativeVector.register(spark)
     val merges = Seq(("x", "y"), ("y", "z"), ("x", "yz"), ("w", "xyz"), ("xy", "z"))
     val mergesLit = typedLit(merges).cast("array<struct<a:string,b:string>>")
     val word = Seq(Tuple1(Seq("w", "x", "y", "z"))).toDF("syms")
@@ -213,7 +210,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("tokenizeCorpus: empty/blank documents survive with zero tokens") {
-    NativeVector.register(spark)
     val docs = Seq((1L, "low lower"), (2L, ""), (3L, "   ")).toDF("doc_id", "text")
     val merges = Bpe.train(docs, "text", numMerges = 3)
     val out = Bpe.tokenizeCorpus(docs, "doc_id", "text", merges)

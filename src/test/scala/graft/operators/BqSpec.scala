@@ -60,7 +60,6 @@ class BqSpec extends SparkSpec {
   test("round-20 native bq_pack equals the replaced expression tree " +
     "bit-for-bit; searchExhaustive equals searchReranked at corpus size") {
     val q = Bq.train(dim = 8, nBits = 128)
-    graft.functions.NativeVector.register(spark)
     // the round-20-BUILD expression form, reconstructed verbatim: per
     // word, 64 float_dots against literal planes under a when-ladder
     def wordCol(v: org.apache.spark.sql.Column, w: Int) =

@@ -40,7 +40,6 @@ class PqSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getAs[scala.collection.Seq[Any]](1)).toMap
     // reference: the pre-round-16 expression, inlined (unitize parks
     // non-finite exactly as encode's staged column did)
-    graft.functions.NativeVector.register(spark)
     val norm = sqrt(graft.functions.NativeVector.dot(col("v"), col("v")))
     val unit = when(!isnan(norm) && norm =!= lit(Double.PositiveInfinity) && norm > 0,
       transform(col("v"), x => (x.cast("double") / norm).cast("float")))
