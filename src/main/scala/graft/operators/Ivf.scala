@@ -42,7 +42,7 @@ object Ivf {
     * IVF cell-recall lever): each vector is indexed under its top-r
     * nearest cells instead of only the argmax cell. At a FIXED nProbe
     * this raises the probability that a probed cell holds the true
-    * neighbor — the PqProbe decomposition showed q118's recall was
+    * neighbor — a BASELINE.md decomposition showed q118's recall was
     * ceilinged by cell recall (0.79 at nProbe=8/16 on the uniform
     * corpus, identical at shortlist 50/200 and m 8/16), so more code
     * fidelity could not help; wider membership can. Cost: r× code
@@ -506,7 +506,7 @@ object Ivf {
     * composition's QUERY side, closing round-19 verdict #1: [[search]]
     * still paid the O(nlist)-per-query centroid scan that
     * [[assignGraph]] already replaced on the corpus side — the
-    * identical shape IvfHnswProbe priced 19× at 16K cells, now on the
+    * identical shape priced 19× at 16K cells (BASELINE.md), now on the
     * latency-critical path). Same discipline as [[assignGraph]]: the
     * centroid graph's beam PROPOSES `cand` cells per query, an EXACT
     * in-order-double dot ordering — ties toward the lower centroid_id,

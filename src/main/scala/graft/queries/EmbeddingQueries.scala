@@ -161,9 +161,9 @@ object EmbeddingQueries {
     })
 
   /** q176 budgets — both arms get IDENTICAL (m, efConstruction,
-    * efSearch); chosen with `graft.tools.HnswProbe` on the mixture
-    * fixture so closest-M sits below saturation (the regime where the
-    * §4-heuristic comparison discriminates). */
+    * efSearch); chosen on the mixture fixture so closest-M sits below
+    * saturation (the regime where the §4-heuristic comparison
+    * discriminates; BASELINE.md records the sweep). */
   private val HnswMixM = 4
   private val HnswMixEfc = 64
   private val HnswMixEf = 16
@@ -357,7 +357,7 @@ object EmbeddingQueries {
     // rows M lookups, exact cosine re-ranks the 50-candidate shortlist.
     // RESIDUAL-coded + MULTIPLE ASSIGNMENT since round 10 (verdict
     // #7): codes quantize unit(v) − own-cell centroid, and each vector
-    // is indexed under its top-2 cells (Ivf.assignedTopR). The PqProbe
+    // is indexed under its top-2 cells (Ivf.assignedTopR). A BASELINE.md
     // decomposition showed single-assign recall was CEILINGED by cell
     // recall at 0.79 (nProbe=8/16; identical at shortlist 50/200 and
     // m 8/16 — finer codes could not help; the uniform corpus gives
@@ -643,7 +643,6 @@ object EmbeddingQueries {
     // tolerances. Corpus is fixture-sized (60 K) at any SF — the gate
     // prices the GEOMETRY, not the scale (q117/q118 price scale).
     "q167_opq_np_mixture" -> ((s, dir) => {
-      import s.implicits._
       val path = mixtureMemo.computeIfAbsent("mixture", _ => {
         val p = tempRegistryDir("graft_opq_mix") + "/corpus"
         graft.sources.SyntheticData
@@ -757,12 +756,7 @@ object EmbeddingQueries {
         ("ann_opq", idx), shortlist = 50, topK = 5)
       val httpRes = resp.flatMap { o =>
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map { i =>
-          val sim = rs.get(i).path("sim")
-          (qid, rs.get(i).path("neighbor_id").asLong,
-            if (sim.isNull || sim.isMissingNode) Double.NaN else sim.asDouble)
-        }
+        graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
       }
       val sset = sparkRes.map(t => (t._1, t._2)).toSet
       val hset = httpRes.map(t => (t._1, t._2)).toSet
@@ -837,12 +831,8 @@ object EmbeddingQueries {
       val httpSide = resp.flatMap { o =>
         val model = o.path("model_used").asText
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map { i =>
-          val sim = rs.get(i).path("sim")
-          (model, qid, rs.get(i).path("neighbor_id").asLong,
-            if (sim.isNull || sim.isMissingNode) None else Some(sim.asDouble))
-        }
+        graft.serve.HttpApi.hitsOf(o).map(h =>
+          (model, qid, h.neighborId, if (h.sim.isNaN) None else Some(h.sim)))
       }.toDF("model", "query_id", "neighbor_id", "hsim")
       sparkSide.join(httpSide, Seq("model", "query_id", "neighbor_id"),
           "full_outer")
@@ -900,20 +890,20 @@ object EmbeddingQueries {
       val shardsOk = resp.forall(_.path("shards").asInt == 2)
       val httpSide = resp.flatMap { o =>
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map { i =>
-          val sim = rs.get(i).path("sim")
-          (qid, rs.get(i).path("neighbor_id").asLong,
-            if (sim.isNull || sim.isMissingNode) None else Some(sim.asDouble))
-        }
+        graft.serve.HttpApi.hitsOf(o).map(h =>
+          (qid, h.neighborId, if (h.sim.isNaN) None else Some(h.sim)))
       }.toDF("query_id", "neighbor_id", "hsim")
       // exhaustive-shortlist equivalence: sharded ≡ unsharded when the
       // per-shard budget covers both shards (both are full exact rerank)
       val exhaustiveOk = {
         val qhead = queries.take(5)
-        val full = graft.serve.LocalAnn.Index(s0.name, s0.family, s0.rot,
-          s0.cb, s0.ids ++ s1.ids, s0.vecs ++ s1.vecs, s0.codes ++ s1.codes,
-          Array.empty, Array.empty)
+        val full = (s0.codec, s1.codec) match {
+          case (c0: graft.serve.LocalAnn.Codec.Pq, c1: graft.serve.LocalAnn.Codec.Pq) =>
+            graft.serve.LocalAnn.Index(s0.name, s0.ids ++ s1.ids, s0.vecs ++ s1.vecs,
+              c0.copy(codes = c0.codes ++ c1.codes))
+          case (c0, c1) => throw new IllegalStateException(
+            s"ann_s0/ann_s1 loaded as ${c0.family}/${c1.family}, not pq")
+        }
         qhead.forall { case (qid, v) =>
           graft.serve.LocalAnn.searchSharded(Seq(s0, s1), qid, v, 100000, 5) ==
             graft.serve.LocalAnn.search(full, qid, v, 100000, 5)
@@ -989,12 +979,8 @@ object EmbeddingQueries {
         filter = Map("label" -> allowed))
       val httpDf = resp.flatMap { o =>
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map { i =>
-          val sim = rs.get(i).path("sim")
-          (qid, rs.get(i).path("neighbor_id").asLong,
-            if (sim.isNull || sim.isMissingNode) None else Some(sim.asDouble))
-        }
+        graft.serve.HttpApi.hitsOf(o).map(h =>
+          (qid, h.neighborId, if (h.sim.isNaN) None else Some(h.sim)))
       }.toDF("query_id", "neighbor_id", "hsim")
       // POST arm: exact unfiltered top-5, then filter — the naive
       // composition's per-query yield (exactly SQL-replayable)
@@ -1104,12 +1090,8 @@ object EmbeddingQueries {
         ("ann_sq8", idx), shortlist = 50000, topK = 5)
       val httpDf = resp.flatMap { o =>
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map { i =>
-          val sim = rs.get(i).path("sim")
-          (qid, rs.get(i).path("neighbor_id").asLong,
-            if (sim.isNull || sim.isMissingNode) None else Some(sim.asDouble))
-        }
+        graft.serve.HttpApi.hitsOf(o).map(h =>
+          (qid, h.neighborId, if (h.sim.isNaN) None else Some(h.sim)))
       }.toDF("query_id", "neighbor_id", "hsim")
       sparkRes.join(httpDf, Seq("query_id", "neighbor_id"), "full_outer")
         .select(col("query_id"), col("neighbor_id"), col("sim"),
@@ -1234,10 +1216,7 @@ object EmbeddingQueries {
         .annSearchOverHttp(queries, ("ann_hnsw", idx), shortlist = ef, topK = 5)
         .flatMap { o =>
           val qid = o.path("query_id").asLong
-          val rs = o.path("results")
-          (0 until rs.size()).map(i => (qid,
-            rs.get(i).path("neighbor_id").asLong,
-            rs.get(i).path("sim").asDouble))
+          graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
         }
       val exhaustive = httpRows(idx.size)
       val tight = httpRows(64).map(t => (t._1, t._2)).toSet
@@ -1363,10 +1342,8 @@ object EmbeddingQueries {
         ("ann_hnsw_app", idx), shortlist = 64, topK = 5)
       val httpRes = resp.flatMap { o =>
         val qid = o.path("query_id").asLong
-        val rs = o.path("results")
-        (0 until rs.size()).map(i => (qid,
-          rs.get(i).path("neighbor_id").asLong,
-          java.lang.Double.doubleToLongBits(rs.get(i).path("sim").asDouble)))
+        graft.serve.HttpApi.hitsOf(o).map(h =>
+          (qid, h.neighborId, java.lang.Double.doubleToLongBits(h.sim)))
       }.toSet
       Seq((queries.size.toLong, httpRes.size.toLong,
           httpRes == freshRes, structEq))
@@ -1426,10 +1403,7 @@ object EmbeddingQueries {
           topK = 5, filter = Map("label" -> allowed))
         .flatMap { o =>
           val qid = o.path("query_id").asLong
-          val rs = o.path("results")
-          (0 until rs.size()).map(i => (qid,
-            rs.get(i).path("neighbor_id").asLong,
-            rs.get(i).path("sim").asDouble))
+          graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
         }
       val exhaustive = httpRows(idx.size)
       val tight = httpRows(64).map(t => (t._1, t._2)).toSet
@@ -1489,13 +1463,7 @@ object EmbeddingQueries {
               val qid = o.path("query_id").asLong
               require(o.path("shards").asInt == 2,
                 "router must report both shards")
-              val rs = o.path("results")
-              (0 until rs.size()).map { i =>
-                val sim = rs.get(i).path("sim")
-                (qid, rs.get(i).path("neighbor_id").asLong,
-                  if (sim.isNull || sim.isMissingNode) Double.NaN
-                  else sim.asDouble)
-              }
+              graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
             }
         def local(shortlist: Int): Seq[(Long, Long, Double)] =
           queries.flatMap { case (qid, v) =>
@@ -1528,8 +1496,8 @@ object EmbeddingQueries {
     // degenerates to ~1/nlist ≈ 0.02, working sits ≥0.9 — the floor
     // separates regardless of seed). The hashed rows flow THROUGH the
     // graph-assigned index: full-probe search over it IS brute force,
-    // replayed by DuckDB. Pricing at real nlist: tools/IvfHnswProbe
-    // (BASELINE.md) — at gate-scale nlist=64 the scan wins, as
+    // replayed by DuckDB. Pricing at real nlist: BASELINE.md's
+    // IVF_HNSW section — at gate-scale nlist=64 the scan wins, as
     // expected; the composition exists for the nlist regime where it
     // doesn't.
     "q184_ivf_hnsw" -> ((s, dir) => {
@@ -1577,7 +1545,7 @@ object EmbeddingQueries {
     // #1: q184 replaced the O(nlist) argmax scan on the CORPUS side,
     // but Ivf.search still picked probe cells by
     // crossJoin(broadcast(centroids)) per QUERY — the identical shape
-    // IvfHnswProbe priced 19× at 16K cells, on the latency-critical
+    // priced 19× at 16K cells (BASELINE.md), on the latency-critical
     // path). Same composition discipline over the SAME memoized
     // index+graph as q184: the centroid graph's beam PROPOSES cells,
     // the exact in-order-double dot ordering (probeCells' window
@@ -1590,7 +1558,7 @@ object EmbeddingQueries {
     // cells → recall ~nProbe/nlist ≈ 0.1; the floor separates at any
     // seed). Hashed rows: searchGraph probing EVERY cell is exact
     // brute force — DuckDB replays them. Pricing at real nlist:
-    // IvfHnswProbe's query-side columns (BASELINE.md round 20).
+    // the query-side columns of BASELINE.md's IVF_HNSW pricing (round 20).
     "q185_ivf_graph_probe" -> ((s, dir) => {
       import s.implicits._
       val e = Tables.embeddings(s, dir).filter(col("vec_id") < 50000)
@@ -1689,10 +1657,7 @@ object EmbeddingQueries {
               val qid = o.path("query_id").asLong
               require(o.path("shards").asInt == 2,
                 "router must report both shards")
-              val rs = o.path("results")
-              (0 until rs.size()).map(i => (qid,
-                rs.get(i).path("neighbor_id").asLong,
-                rs.get(i).path("sim").asDouble))
+              graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
             }
         def local(ef: Int): Seq[(Long, Long, Double)] =
           queries.flatMap { case (qid, v) =>
@@ -1874,10 +1839,8 @@ object EmbeddingQueries {
           queries.map { case (qid, v) => ("del_sq8", qid, v, sqIdx.size) },
           topK = 5)
           .flatMap { o =>
-            val rs = o.path("results")
-            (0 until rs.size()).map(i => (o.path("query_id").asLong,
-              rs.get(i).path("neighbor_id").asLong,
-              rs.get(i).path("sim").asDouble))
+            graft.serve.HttpApi.hitsOf(o).map(h =>
+              (o.path("query_id").asLong, h.neighborId, h.sim))
           }.sortBy(t => (t._1, t._2)) == ivfRows
       } finally server.stop()
       ivfRows.toDF("query_id", "neighbor_id", "sim")
@@ -2053,10 +2016,7 @@ object EmbeddingQueries {
               val qid = o.path("query_id").asLong
               require(o.path("shards").asInt == 2,
                 "router must report both shards")
-              val rs = o.path("results")
-              (0 until rs.size()).map(i => (qid,
-                rs.get(i).path("neighbor_id").asLong,
-                rs.get(i).path("sim").asDouble))
+              graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
             }
         def bits(r: Seq[(Long, Long, Double)]) =
           r.map(t => (t._1, t._2, java.lang.Double.doubleToLongBits(t._3))).toSet
@@ -2234,10 +2194,7 @@ object EmbeddingQueries {
           (os.flatMap { o =>
             val qid = o.path("query_id").asLong
             require(o.path("shards").asInt == 2, "router must report both shards")
-            val rs = o.path("results")
-            (0 until rs.size()).map(i => (qid,
-              rs.get(i).path("neighbor_id").asLong,
-              rs.get(i).path("sim").asDouble))
+            graft.serve.HttpApi.hitsOf(o).map(h => (qid, h.neighborId, h.sim))
           }, os.map(_.path("hedged").asInt))
         }
         def bits(r: Seq[(Long, Long, Double)]) =

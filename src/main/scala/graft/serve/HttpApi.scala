@@ -117,8 +117,8 @@ object HttpApi {
     // /models registry convention applied to search); `annModel` stays
     // as the single-index convenience and is just the head of the list.
     // A name may map to N SHARDS (round 17): /ann/search fans out and
-    // merges (LocalAnn.searchSharded); one family per group, enforced
-    // here so a mixed group fails at startup, not per request
+    // merges (LocalAnn.searchSharded); one family and one dim per group,
+    // enforced here so a mixed group fails at startup, not per request
     val allAnn: Seq[(String, Seq[LocalAnn.Index])] =
       annModel.toSeq.map { case (n, i) => (n, Seq(i)) } ++
         annModels.map { case (n, i) => (n, Seq(i)) } ++ annShards
@@ -153,6 +153,8 @@ object HttpApi {
       require(shards.nonEmpty, s"ann index '$n' has no shards")
       require(shards.map(_.family).distinct.length == 1,
         s"ann index '$n' mixes families ${shards.map(_.family).distinct.mkString(", ")}")
+      require(shards.map(_.dim).distinct.length == 1,
+        s"ann index '$n' mixes dims ${shards.map(_.dim).distinct.mkString(", ")}")
     }
     val edge = HttpEdge.bind(port)
     // a route whose upstream is THIS server would scatter to itself and
@@ -312,6 +314,18 @@ object HttpApi {
         java.net.http.HttpResponse.BodyHandlers.ofByteArray())
       require(resp.statusCode == 200, s"ann search failed: HTTP ${resp.statusCode}")
       mapper.readTree(resp.body())
+    }
+  }
+
+  /** The hits of one `/ann/search` reply, in reply order. A null or
+    * missing `sim` (a zero-norm row) reads back as NaN, the marker
+    * [[LocalAnn.Hit]] carries for it. */
+  def hitsOf(reply: JsonNode): Seq[LocalAnn.Hit] = {
+    val rs = reply.path("results")
+    (0 until rs.size()).map { i =>
+      val sim = rs.get(i).path("sim")
+      LocalAnn.Hit(rs.get(i).path("neighbor_id").asLong,
+        if (sim.isNull || sim.isMissingNode) Double.NaN else sim.asDouble)
     }
   }
 
@@ -583,16 +597,8 @@ object HttpApi {
           }
           i += 1
         }
-        val expectDim = idx.family match {
-          case "ivf"  => idx.centroids.headOption.map(_.length).getOrElse(0)
-          case "sq8"  => idx.sq.map(_.dim).getOrElse(0)
-          case "bq"   => idx.bq.map(_.dim).getOrElse(0)
-          case "hnsw" => idx.vecs.headOption.map(_.length).getOrElse(0)
-          case _ if idx.rot.isDefined => idx.rot.get.length
-          case _ => idx.cb.map(_.dim).getOrElse(0)
-        }
-        if (vec.length != expectDim) {
-          respond(ex, 422, err(s"embedding has ${vec.length} dims, index wants $expectDim"))
+        if (vec.length != idx.dim) {
+          respond(ex, 422, err(s"embedding has ${vec.length} dims, index wants ${idx.dim}"))
           return
         }
         val qidNode = body.path("query_id")
@@ -748,20 +754,9 @@ object HttpApi {
       case None => ()
     }
     val parsed = resps.map(r => mapper.readTree(r.body()))
-    var shardCount = 0
-    val hits = collection.mutable.ArrayBuffer[LocalAnn.Hit]()
-    parsed.foreach { o =>
-      shardCount += (if (o.path("shards").isInt) o.path("shards").asInt else 1)
-      val rs = o.path("results")
-      (0 until rs.size()).foreach { i =>
-        val h = rs.get(i)
-        val simNode = h.path("sim")
-        hits += LocalAnn.Hit(h.path("neighbor_id").asLong,
-          if (simNode.isNull || simNode.isMissingNode) Double.NaN
-          else simNode.asDouble)
-      }
-    }
-    val merged = LocalAnn.topHits(hits.toSeq, topK)
+    val shardCount =
+      parsed.map(o => if (o.path("shards").isInt) o.path("shards").asInt else 1).sum
+    val merged = LocalAnn.topHits(parsed.flatMap(hitsOf), topK)
     val ms = (System.nanoTime() - t0) / 1e6
     s.predictionCount.increment()
     s.totalLatencyMs.add(ms)

@@ -2,7 +2,7 @@ package graft.serve
 
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.{Bq, Hnsw, Ivf, Opq, Pq, Sq, TopK}
+import graft.operators.{Hnsw, Ivf, Sq, TopK}
 
 /** Driver-local ANN searcher over a REGISTERED artifact — the serving
   * half of the ANN tier (round-15 verdict #4: registry artifacts were
@@ -31,36 +31,72 @@ import graft.operators.{Bq, Hnsw, Ivf, Opq, Pq, Sq, TopK}
   */
 object LocalAnn {
 
-  /** A loaded, serveable index.
-    * `family` ∈ {"ivf", "pq", "opq", "sq8", "hnsw", "bq"}.
-    *  - pq/opq: `cb`+`ids`/`codes`/`vecs` drive ADC + rerank; `rot` is
-    *    the OPQ rotation (identity absent).
-    *  - ivf: `centroids`+`cellOf` drive the probe; vecs are exact.
+  /** A loaded, serveable index: row i is `ids(i)` with its
+    * full-precision vector `vecs(i)` (every family's exact rerank reads
+    * it), and `codec` is the family's candidate-scan structure over
+    * those rows.
     *  - `attrs` (round 17): per-row integer metadata columns loaded via
     *    `load(attrCols = ...)` — the FAISS-IDSelector / vector-DB
     *    metadata-filter substrate. Row i of every attrs array describes
-    *    ids(i). */
-  final case class Index(name: String, family: String,
-                         rot: Option[Array[Array[Double]]],
-                         cb: Option[Pq.Codebooks],
+    *    ids(i).
+    *  - `deleted`: the registry tombstone mask, row-aligned (empty = no
+    *    tombstones). */
+  final case class Index(name: String,
                          ids: Array[Long],
                          vecs: Array[Array[Float]],
-                         codes: Array[Array[Int]],
-                         centroids: Array[Array[Float]],
-                         cellOf: Array[Int],
+                         codec: Codec,
                          attrs: Map[String, Array[Long]] = Map.empty,
-                         sq: Option[Sq.Quantizer] = None,
-                         hnsw: Option[Hnsw.Graph] = None,
-                         deleted: Array[Boolean] = Array.empty,
-                         centGraph: Option[CentroidProbe] = None,
-                         bq: Option[Bq.Quantizer] = None,
-                         lcodes: Array[Array[Long]] = Array.empty) {
+                         deleted: Array[Boolean] = Array.empty) {
+    def family: String = codec.family
+    def dim: Int = codec.dim
     def size: Int = ids.length
     /** Row i survives the registry tombstone mask (round 19 — FAISS
       * remove_ids semantics: deleted rows stay IN the artifact and the
       * loaded arrays, they just never surface from a search). */
     def live(i: Int): Boolean = deleted.isEmpty || !deleted(i)
     def deletedCount: Int = if (deleted.isEmpty) 0 else deleted.count(identity)
+  }
+
+  /** How an index encodes its rows for the candidate scan: one case per
+    * family, so [[search]] is one exhaustive match. `family` is the
+    * name `/models` (`ann_<family>`) and `/ann/search` report; `dim` is
+    * the one query length the index accepts. Code arrays are
+    * row-aligned with [[Index.ids]]; a null code row is parked (never
+    * ranked). */
+  sealed abstract class Codec(val family: String, val dim: Int)
+
+  object Codec {
+    /** pq/opq: ADC over `codes` (one centroid index per subspace) under
+      * the codebooks `cb`, then exact rerank. `rot` is the OPQ rotation,
+      * applied to the query first; the family is "opq" exactly when it
+      * is defined, and the query then has the rotation's dimension. */
+    final case class Pq(cb: graft.operators.Pq.Codebooks,
+                        rot: Option[Array[Array[Double]]],
+                        codes: Array[Array[Int]])
+        extends Codec(if (rot.isDefined) "opq" else "pq", rot.fold(cb.dim)(_.length))
+
+    /** sq8: one byte code per dimension under the per-dimension
+      * min/max quantizer `q`; decode-and-scan, then exact rerank. */
+    final case class Sq8(q: Sq.Quantizer, codes: Array[Array[Int]]) extends Codec("sq8", q.dim)
+
+    /** bq: sign bits of the rows against `q`'s random planes, packed 64
+      * per word; Hamming scan, then exact rerank. */
+    final case class Bq(q: graft.operators.Bq.Quantizer, words: Array[Array[Long]])
+        extends Codec("bq", q.dim)
+
+    /** ivf: row i lives in cell `cellOf(i)` of the coarse `centroids`;
+      * the probed cells are scanned exactly. `probe` (round 20, see
+      * [[withCentroidGraph]]) picks the candidate cells by a graph beam
+      * instead of a scan of every centroid. */
+    final case class Ivf(centroids: Array[Array[Float]], cellOf: Array[Int],
+                         probe: Option[CentroidProbe] = None)
+        extends Codec("ivf", centroids.headOption.fold(0)(_.length)) {
+      require(centroids.nonEmpty, "ivf index has no centroids")
+    }
+
+    /** hnsw: the graph is the whole index; its nodes are the rows. */
+    final case class Hnsw(g: graft.operators.Hnsw.Graph)
+        extends Codec("hnsw", g.vecs.headOption.fold(0)(_.length))
   }
 
   /** True when row i passes every attribute constraint in `allow`
@@ -102,21 +138,26 @@ object LocalAnn {
     * of the full centroid scan. No-op knobs (`efSearch`/`cand` ≥
     * nlist) reproduce the scan bit-for-bit. */
   def withCentroidGraph(idx: Index, efSearch: Int, cand: Int,
-                        m: Int = 16, efConstruction: Int = 100): Index = {
-    require(idx.family == "ivf",
-      s"centroid-graph probing applies to the ivf family, not '${idx.family}'")
-    require(idx.centroids.nonEmpty, "ivf index has no centroids")
-    val g = Hnsw.build(
-      idx.centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }.toSeq,
-      m, efConstruction)
-    idx.copy(centGraph = Some(CentroidProbe(g, efSearch, cand)))
-  }
+                        m: Int = 16, efConstruction: Int = 100): Index =
+    idx.codec match {
+      case c: Codec.Ivf =>
+        val g = Hnsw.build(
+          c.centroids.zipWithIndex.map { case (cv, i) => (i.toLong, cv) }.toSeq,
+          m, efConstruction)
+        idx.copy(codec = c.copy(probe = Some(CentroidProbe(g, efSearch, cand))))
+      case other => throw new IllegalArgumentException(
+        s"centroid-graph probing applies to the ivf family, not '${other.family}'")
+    }
 
-  /** Load a registered artifact into a serveable in-memory index.
-    * Family comes from the on-disk layout (ModelRegistry.kindOf):
-    * "opq" wants rotation + codebooks + codes, "pq" codebooks + codes,
-    * "ivf" centroids + assigned. The codes table must carry the id,
-    * the (rotated, for opq) vector column, and `codes`.
+  /** Load a registered artifact into a serveable in-memory index. The
+    * family comes from the on-disk layout (ModelRegistry.kindOf), and
+    * this is the one place a family name picks a [[Codec]]:
+    *  - "opq": rotation + codebooks + `codes`; "pq": codebooks + `codes`;
+    *  - "sq8": quantizer + `sq_codes`; "bq": planes + `bq_codes`;
+    *  - "ivf": centroids + the assigned table;
+    *  - "hnsw": the saved graph.
+    * A codes table must carry the id, the (rotated, for opq) vector
+    * column, and its codes column.
     *
     * `attrCols` (round 17 — filtered search): names of integer columns
     * riding the codes/assigned table to load as per-row metadata for
@@ -141,7 +182,6 @@ object LocalAnn {
     // One resolution here, explicit version everywhere below.
     val v = if (version > 0) version
             else ModelRegistry.latestVersion(spark, root, name)
-    val family = ModelRegistry.kindOf(spark, root, name, v)
     def codesTable(codesCol: String) = {
       val path = s"${ModelRegistry.artifactPathOf(spark, root, name, v)}/pq_codes"
       val fs = new org.apache.hadoop.fs.Path(path)
@@ -153,25 +193,22 @@ object LocalAnn {
         graft.sources.DriverParquet.readRows(spark, path),
         codesCol, attrCols, name)
     }
-    val base = family match {
-      case "opq" | "pq" =>
+    val base = ModelRegistry.kindOf(spark, root, name, v) match {
+      case kind @ ("opq" | "pq") =>
         val rot =
-          if (family == "opq") Some(ModelRegistry.loadOpq(spark, root, name, v).rows)
+          if (kind == "opq") Some(ModelRegistry.loadOpq(spark, root, name, v).rows)
           else None
         val cb = ModelRegistry.loadPq(spark, root, name, v)
         val (ids, vecs, codes, attrs) = codesTable("codes")
-        Index(name, family, rot, Some(cb), ids, vecs, narrow(codes),
-          Array.empty, Array.empty, attrs)
+        Index(name, ids, vecs, Codec.Pq(cb, rot, narrow(codes)), attrs)
       case "sq8" =>
         val q = ModelRegistry.loadSq(spark, root, name, v)
         val (ids, vecs, codes, attrs) = codesTable("sq_codes")
-        Index(name, family, None, None, ids, vecs, narrow(codes),
-          Array.empty, Array.empty, attrs, Some(q))
+        Index(name, ids, vecs, Codec.Sq8(q, narrow(codes)), attrs)
       case "bq" =>
         val q = ModelRegistry.loadBq(spark, root, name, v)
-        val (ids, vecs, codes, attrs) = codesTable("bq_codes")
-        Index(name, family, None, None, ids, vecs, Array.empty,
-          Array.empty, Array.empty, attrs, bq = Some(q), lcodes = codes)
+        val (ids, vecs, words, attrs) = codesTable("bq_codes")
+        Index(name, ids, vecs, Codec.Bq(q, words), attrs)
       case "hnsw" =>
         // the graph IS the serveable artifact; attr columns (round 18)
         // ride the saved nodes table — read them id-sorted so row i
@@ -187,11 +224,10 @@ object LocalAnn {
               .sortBy(_.getLong(schema.fieldIndex("id")))
             readAttrs(rows, schema, attrCols, name)
           }
-        Index(name, family, None, None, g.ids, g.vecs, Array.empty,
-          Array.empty, Array.empty, attrs, None, Some(g))
+        fromGraph(name, g).copy(attrs = attrs)
       case "ivf" =>
-        val (idCol, vecCol, centRows, rows, schema) = graft.operators.Ivf
-          .loadLocal(spark, ModelRegistry.artifactPathOf(spark, root, name, v))
+        val (idCol, vecCol, centRows, rows, schema) =
+          Ivf.loadLocal(spark, ModelRegistry.artifactPathOf(spark, root, name, v))
         val cents = centRows.sortBy(_.getInt(0))
           .map(_.getAs[scala.collection.Seq[Float]]("cvec").toArray)
         val n = rows.length
@@ -206,7 +242,7 @@ object LocalAnn {
           cellOf(i) = r.getInt(r.schema.fieldIndex("centroid_id"))
           i += 1
         }
-        Index(name, family, None, None, ids, vecs, Array.empty, cents, cellOf,
+        Index(name, ids, vecs, Codec.Ivf(cents, cellOf),
           readAttrs(rows, schema, attrCols, name))
       case other => throw new IllegalArgumentException(
         s"registered '$name' is family '$other' - not a serveable ANN artifact")
@@ -225,12 +261,11 @@ object LocalAnn {
     * No attrs/tombstones ride this path (those are registry-artifact
     * concerns; a fleet with either registers per-shard artifacts). */
   def fromGraph(name: String, g: Hnsw.Graph): Index =
-    Index(name, "hnsw", None, None, g.ids, g.vecs, Array.empty,
-      Array.empty, Array.empty, Map.empty, None, Some(g))
+    Index(name, g.ids, g.vecs, Codec.Hnsw(g))
 
   /** Collect a codes table (`codesCol` = "codes" for pq/opq, "sq_codes"
-    * for sq8) into serving arrays, resolving the id/vec columns by
-    * schema TYPE, not position (round-16 verdict #4 / advice: encode
+    * for sq8, "bq_codes" for bq) into serving arrays, resolving the
+    * id/vec columns by schema TYPE, not position (round-16 verdict #4 / advice: encode
     * happens to keep input column order today, but a layout change
     * there would mis-wire serving while the operator spec stayed
     * green). The table must carry exactly one long column (the id) and
@@ -434,18 +469,20 @@ object LocalAnn {
     * order `sortBy` gives (Double, Long) tuples, so the hits, their order
     * and their sim bits are those of a sort-then-take selection
     * (TopKParitySpec checks that against such code). The query's
-    * finiteness is checked here, once, for every family. */
+    * finiteness and length are checked here, once, for every family. */
   def search(idx: Index, queryId: Long, query: Array[Float],
              shortlist: Int, topK: Int, dropSelf: Boolean = true,
              allow: Map[String, Set[Long]] = Map.empty): Seq[Hit] = {
     Hnsw.requireFinite(query)
+    require(query.length == idx.dim,
+      s"query dim ${query.length} does not match the index's ${idx.dim}")
     validateFilter(idx, allow)
-    idx.family match {
-      case "opq" | "pq" => searchPq(idx, queryId, query, shortlist, topK, dropSelf, allow)
-      case "sq8"        => searchSq(idx, queryId, query, shortlist, topK, dropSelf, allow)
-      case "bq"         => searchBq(idx, queryId, query, shortlist, topK, dropSelf, allow)
-      case "ivf"        => searchIvf(idx, queryId, query, shortlist, topK, dropSelf, allow)
-      case "hnsw" =>
+    idx.codec match {
+      case c: Codec.Pq  => searchPq(idx, c, queryId, query, shortlist, topK, dropSelf, allow)
+      case c: Codec.Sq8 => searchSq(idx, c, queryId, query, shortlist, topK, dropSelf, allow)
+      case c: Codec.Bq  => searchBq(idx, c, queryId, query, shortlist, topK, dropSelf, allow)
+      case c: Codec.Ivf => searchIvf(idx, c, queryId, query, shortlist, topK, dropSelf, allow)
+      case Codec.Hnsw(g) =>
         // `shortlist` is efSearch here (the nProbe convention: one
         // breadth knob per family); Hnsw.search already emits the
         // canonical (sim desc, id asc) rounded-cosine hits. A filter
@@ -460,11 +497,10 @@ object LocalAnn {
         val pred: Option[Int => Boolean] =
           if (allow.isEmpty && idx.deleted.isEmpty) None
           else Some((i: Int) => idx.live(i) && passes(idx, i, allow))
-        Hnsw.searchFinite(idx.hnsw.get, query, efSearch = shortlist, topK = topK,
+        Hnsw.searchFinite(g, query, efSearch = shortlist, topK = topK,
             dropId = if (dropSelf) Some(queryId) else None,
             allow = pred)
           .map { case (id, sim) => Hit(id, sim) }
-      case other => throw new IllegalStateException(s"unserveable family $other")
     }
   }
 
@@ -476,12 +512,10 @@ object LocalAnn {
     * (integer arithmetic — no accumulation-order sensitivity at all),
     * shortlist ties (ham asc, id asc), exact rerank identical to every
     * other family. */
-  private def searchBq(idx: Index, queryId: Long, q: Array[Float],
+  private def searchBq(idx: Index, c: Codec.Bq, queryId: Long, q: Array[Float],
                        shortlist: Int, topK: Int, dropSelf: Boolean,
                        allow: Map[String, Set[Long]]): Seq[Hit] = {
-    val bq = idx.bq.get
-    require(q.length == bq.dim,
-      s"query dim ${q.length} does not match the index")
+    val bq = c.q
     val nWords = bq.nWords
     val qcodes = new Array[Long](nWords)
     var w = 0
@@ -501,7 +535,7 @@ object LocalAnn {
     val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     var i = 0
     while (i < idx.size) {
-      val cs = idx.lcodes(i)
+      val cs = c.words(i)
       if (cs != null && idx.live(i) && !(dropSelf && idx.ids(i) == queryId) &&
           passes(idx, i, allow)) {
         var ham = 0
@@ -522,17 +556,15 @@ object LocalAnn {
     * NativeVector.cosine's in-order double dot (null → NaN marker,
     * sorts last like SQL nulls), shortlist ties (approx desc, id asc),
     * exact rerank identical to the pq path. */
-  private def searchSq(idx: Index, queryId: Long, q: Array[Float],
+  private def searchSq(idx: Index, c: Codec.Sq8, queryId: Long, q: Array[Float],
                        shortlist: Int, topK: Int, dropSelf: Boolean,
                        allow: Map[String, Set[Long]]): Seq[Hit] = {
-    val sq = idx.sq.get
-    require(q.length == sq.dim,
-      s"query dim ${q.length} does not match the index")
+    val sq = c.q
     val spans = sq.spans
     val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     var i = 0
     while (i < idx.size) {
-      val cs = idx.codes(i)
+      val cs = c.codes(i)
       if (cs != null && idx.live(i) && !(dropSelf && idx.ids(i) == queryId) &&
           passes(idx, i, allow)) {
         // decode + cosine fused: dec_d = cs(d)·span_d + min_d
@@ -561,14 +593,12 @@ object LocalAnn {
     * rows `sortBy((adc, id)).take(shortlist)` kept (same total order on
     * adc, ties by id), and the rerank is a total order on (sim, id), so
     * the survivors need no sort of their own. */
-  private def searchPq(idx: Index, queryId: Long, queryRaw: Array[Float],
+  private def searchPq(idx: Index, pq: Codec.Pq, queryId: Long, queryRaw: Array[Float],
                        shortlist: Int, topK: Int, dropSelf: Boolean,
                        allow: Map[String, Set[Long]]): Seq[Hit] = {
-    val cb = idx.cb.get
-    require(queryRaw.length == (if (idx.rot.isDefined) idx.rot.get.length else cb.dim),
-      s"query dim ${queryRaw.length} does not match the index")
+    val cb = pq.cb
     // 1. rotate (opq): Opq.rotate's exact loop — double acc, toFloat
-    val q: Array[Float] = idx.rot match {
+    val q: Array[Float] = pq.rot match {
       case Some(r) =>
         val d = r.length
         val y = new Array[Float](d)
@@ -607,7 +637,7 @@ object LocalAnn {
     val short = new TopK(maxRoot = true, math.min(shortlist, idx.size))
     i = 0
     while (i < idx.size) {
-      val cs = idx.codes(i)
+      val cs = pq.codes(i)
       if (cs != null && idx.live(i) && !(dropSelf && idx.ids(i) == queryId) &&
           passes(idx, i, allow)) {
         var adc = 0.0
@@ -623,35 +653,33 @@ object LocalAnn {
     rerank(idx, q, short, topK)
   }
 
-  private def searchIvf(idx: Index, queryId: Long, q: Array[Float],
+  private def searchIvf(idx: Index, ivf: Codec.Ivf, queryId: Long, q: Array[Float],
                         nProbe: Int, topK: Int, dropSelf: Boolean,
                         allow: Map[String, Set[Long]]): Seq[Hit] = {
-    require(idx.centroids.nonEmpty, "ivf index has no centroids")
-    require(q.length == idx.centroids(0).length,
-      s"query dim ${q.length} does not match the index")
+    val centroids = ivf.centroids
     // probe ranking: raw dot desc, centroid_id asc (Ivf.search's
     // window). With a centroid graph attached (round 20) the beam
     // PROPOSES the cells and the same exact dot ordering DECIDES among
     // the proposals — Ivf.probeCellsGraph's discipline; exhaustive
     // knobs reproduce the scan bit-for-bit, tight knobs skip the
     // O(nlist) sweep on the request path.
-    val candidateCells: Seq[Int] = idx.centGraph match {
+    val candidateCells: Seq[Int] = ivf.probe match {
       case Some(cp) =>
         Hnsw.searchFinite(cp.g, q, cp.efSearch, cp.cand, None, None).map(_._1.toInt)
-      case None => idx.centroids.indices
+      case None => centroids.indices
     }
     val probes = new TopK(maxRoot = true, math.min(nProbe, candidateCells.size))
     candidateCells.foreach { c =>
       var s = 0.0; var i = 0
-      while (i < q.length) { s += q(i).toDouble * idx.centroids(c)(i); i += 1 }
+      while (i < q.length) { s += q(i).toDouble * centroids(c)(i); i += 1 }
       probes.offer(-s, c, c)
     }
-    val probed = new Array[Boolean](idx.centroids.length)
+    val probed = new Array[Boolean](centroids.length)
     (0 until probes.size).foreach(p => probed(probes.row(p)) = true)
     val top = new TopK(maxRoot = true, math.min(topK, idx.size))
     var i = 0
     while (i < idx.size) {
-      val cell = idx.cellOf(i)
+      val cell = ivf.cellOf(i)
       if (cell >= 0 && cell < probed.length && probed(cell) && idx.live(i) &&
           !(dropSelf && idx.ids(i) == queryId) &&
           passes(idx, i, allow)) {

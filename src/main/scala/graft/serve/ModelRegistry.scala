@@ -258,8 +258,10 @@ object ModelRegistry {
 
   /** Which family a registered artifact belongs to, from its on-disk
     * layout: "leafboost" ($path/leafboost_nodes), "bilstm"
-    * ($path/bilstm_weights), "ivf" ($path/ivf_centroids), "pq"
-    * ($path/pq_codebooks), else "pipeline" (MLlib's metadata dir). */
+    * ($path/bilstm_weights), "ivf" ($path/ivf_centroids), "opq"
+    * ($path/opq_rotation), "pq" ($path/pq_codebooks), "sq8"
+    * ($path/sq_meta), "bq" ($path/bq_meta), "hnsw" ($path/hnsw_meta),
+    * else "pipeline" (MLlib's metadata dir). */
   def kindOf(spark: SparkSession, root: String, name: String,
              version: Long = -1L): String = {
     val path = artifactPath(spark, root, name, version)

@@ -87,7 +87,6 @@ object ProbeR21 {
     }
 
     if (which("registry")) {
-      import spark.implicits._
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.sql.Timestamp
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class AsOfJoinSpec extends SparkSpec {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.sql.Timestamp
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.queries.Util.addCols
 

@@ -101,7 +101,8 @@ class BqSpec extends SparkSpec {
       reloaded, queries, "vec_id", "embedding", shortlist, topK = 5,
       dropSelf = true))
     val idx = LocalAnn.load(spark, root, "bq")
-    assert(idx.family == "bq" && idx.size == 160 && idx.lcodes.length == 160)
+    assert(idx.family == "bq" && idx.size == 160 &&
+      PartialFunction.cond(idx.codec) { case c: LocalAnn.Codec.Bq => c.words.length == 160 })
     def served(shortlist: Int) = queries.collect().flatMap { r =>
       val qid = r.getLong(0)
       val v = r.getAs[scala.collection.Seq[Float]](1).toArray

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** HNSW contracts (round 17, Malkov & Yashunin 2016): recall against
@@ -69,7 +68,8 @@ class HnswSpec extends SparkSpec {
     // LocalAnn: the fifth served family — search() mirrors Hnsw.search,
     // shortlist doubles as efSearch
     val idx = graft.serve.LocalAnn.load(spark, root, "hnsw")
-    assert(idx.family == "hnsw" && idx.hnsw.nonEmpty && idx.size == 400)
+    assert(idx.family == "hnsw" &&
+      idx.codec.isInstanceOf[graft.serve.LocalAnn.Codec.Hnsw] && idx.size == 400)
     for ((qid, qv) <- qs) {
       val served = graft.serve.LocalAnn.search(idx, qid, qv, 64, 5)
         .map(h => (h.neighborId, h.sim))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** MMR re-ranking contracts (round 17, Carbonell & Goldstein 1998):

@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Embeddings, Ivf, Opq, Pq}
+import graft.operators.{Bq, Embeddings, Hnsw, Ivf, Opq, Pq, Sq}
 
 /** The ANN serving contracts (round-15 verdict #4): LocalAnn's scalar
   * search is BIT-IDENTICAL to the Spark search for every family
@@ -74,7 +74,8 @@ class LocalAnnSpec extends SparkSpec {
       ModelRegistry.loadPq(spark, root, "opq"), qr, "vec_id", "embedding",
       shortlist = 20, topK = 5, dropSelf = true))
     val idx = LocalAnn.load(spark, root, "opq")
-    assert(idx.family == "opq" && idx.rot.nonEmpty)
+    assert(idx.family == "opq" &&
+      PartialFunction.cond(idx.codec) { case c: LocalAnn.Codec.Pq => c.rot.nonEmpty })
     // LocalAnn takes the RAW (unrotated) query — the rotation is the
     // server's job, exactly what a deployment client expects
     assert(hitsOf(idx, 20, 5) == sparkSide)
@@ -87,7 +88,8 @@ class LocalAnnSpec extends SparkSpec {
     val sparkSide = rows(Ivf.search(ModelRegistry.loadIvf(spark, root, "ivf"),
       queries, "vec_id", "embedding", nProbe = 2, topK = 5))
     val idx = LocalAnn.load(spark, root, "ivf")
-    assert(idx.family == "ivf" && idx.centroids.length == 4)
+    assert(idx.family == "ivf" &&
+      PartialFunction.cond(idx.codec) { case c: LocalAnn.Codec.Ivf => c.centroids.length == 4 })
     assert(hitsOf(idx, 2, 5) == sparkSide) // shortlist == nProbe for ivf
   }
 
@@ -385,7 +387,7 @@ class LocalAnnSpec extends SparkSpec {
       ModelRegistry.loadSq(spark, root, "sq8"), queries, "vec_id", "embedding",
       shortlist = 20, topK = 5, dropSelf = true))
     val idx = LocalAnn.load(spark, root, "sq8")
-    assert(idx.family == "sq8" && idx.sq.nonEmpty && idx.size == 160)
+    assert(idx.family == "sq8" && idx.codec.isInstanceOf[LocalAnn.Codec.Sq8] && idx.size == 160)
     assert(hitsOf(idx, 20, 5) == sparkSide)
     // exhaustive shortlist ≡ brute force (the searchReranked contract,
     // carried over the serving mirror)
@@ -854,5 +856,51 @@ class LocalAnnSpec extends SparkSpec {
         HttpApi.start(annReplicaRoutes = Seq(("pq", Seq(Seq(up0.port), Seq()))))
       }
     } finally { up0.stop(); up1a.stop(); up1b.stop() }
+  }
+
+  test("a query one dimension short or long fails with IllegalArgumentException " +
+    "on every family, hnsw included") {
+    val dim = 4
+    val rnd = new scala.util.Random(7L)
+    val ids = Array.tabulate(12)(_.toLong)
+    val vecs = Array.fill(12, dim)(rnd.nextGaussian().toFloat)
+    val cb = Pq.Codebooks(Array.fill(2, 4, dim / 2)(rnd.nextGaussian().toFloat),
+      m = 2, k = 4, dim = dim)
+    val codes = Array.fill(12, 2)(rnd.nextInt(4))
+    val identity = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
+    val idxs = Seq(
+      LocalAnn.Index("pq", ids, vecs, LocalAnn.Codec.Pq(cb, None, codes)),
+      LocalAnn.Index("opq", ids, vecs, LocalAnn.Codec.Pq(cb, Some(identity), codes)),
+      LocalAnn.Index("sq8", ids, vecs, LocalAnn.Codec.Sq8(
+        Sq.Quantizer(Array.fill(dim)(-3f), Array.fill(dim)(3f)),
+        Array.fill(12, dim)(rnd.nextInt(256)))),
+      LocalAnn.Index("bq", ids, vecs, LocalAnn.Codec.Bq(
+        Bq.Quantizer(Array.fill(64, dim)(rnd.nextGaussian()), 7L),
+        Array.fill(12, 1)(rnd.nextLong()))),
+      LocalAnn.Index("ivf", ids, vecs,
+        LocalAnn.Codec.Ivf(vecs.take(3), Array.tabulate(12)(_ % 3))),
+      LocalAnn.fromGraph("hnsw", Hnsw.build(ids.toSeq.zip(vecs), m = 3, efConstruction = 6)))
+    assert(idxs.map(_.family) == Seq("pq", "opq", "sq8", "bq", "ivf", "hnsw"))
+    idxs.foreach { idx =>
+      assert(idx.dim == dim, idx.family)
+      val q = vecs(0)
+      assert(LocalAnn.search(idx, 0L, q, 12, 3).nonEmpty, idx.family)
+      Seq(q.take(3), q :+ 0.5f).foreach { bad =>
+        val e = intercept[IllegalArgumentException](LocalAnn.search(idx, 0L, bad, 12, 3))
+        assert(e.getMessage.contains(s"query dim ${bad.length}"), idx.family)
+      }
+    }
+  }
+
+  test("start rejects a shard group whose shards differ in dimension") {
+    val rnd = new scala.util.Random(11L)
+    def graph(dim: Int) = Hnsw.build(
+      (0 until 8).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat))),
+      m = 3, efConstruction = 6)
+    val e = intercept[IllegalArgumentException] {
+      HttpApi.start(annShards = Seq(("mixed",
+        Seq(LocalAnn.fromGraph("mixed", graph(4)), LocalAnn.fromGraph("mixed", graph(3))))))
+    }
+    assert(e.getMessage.contains("mixes dims"))
   }
 }

@@ -1,6 +1,5 @@
 package graft.serve
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Golden tests for the heuristic scorer — the four dashboard presets

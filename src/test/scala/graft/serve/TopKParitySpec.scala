@@ -8,7 +8,7 @@ import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bq, Hnsw, Pq, Sq, TopK}
-import LocalAnn.{Hit, Index}
+import LocalAnn.{Codec, Hit, Index}
 import TopKParitySpec.{Case, Problem}
 
 /** The bounded top-k selection behind every driver-local ANN search
@@ -121,10 +121,9 @@ class TopKParitySpec extends AnyFunSuite {
 
   private def oSearch(idx: Index, queryId: Long, q0: Array[Float], shortlist: Int,
                       topK: Int, dropSelf: Boolean, allow: Map[String, Set[Long]]): Seq[Hit] =
-    idx.family match {
-      case "opq" | "pq" =>
-        val cb = idx.cb.get
-        val q = idx.rot.fold(q0)(r => r.map { w =>
+    idx.codec match {
+      case Codec.Pq(cb, rot, codes) =>
+        val q = rot.fold(q0)(r => r.map { w =>
           var s = 0.0; var i = 0
           while (i < w.length) { s += q0(i).toDouble * w(i); i += 1 }
           s.toFloat
@@ -140,19 +139,18 @@ class TopKParitySpec extends AnyFunSuite {
           }
           ss
         }
-        val cand = oRows(idx, queryId, dropSelf, allow, idx.codes(_) != null).map { i =>
+        val cand = oRows(idx, queryId, dropSelf, allow, codes(_) != null).map { i =>
           var adc = 0.0
-          (0 until cb.m).foreach(m => adc += tab(m)(idx.codes(i)(m)))
+          (0 until cb.m).foreach(m => adc += tab(m)(codes(i)(m)))
           (adc, idx.ids(i), i)
         }
         oRerank(idx, q, cand.sortBy(t => (t._1, t._2)).take(shortlist).map(_._3), topK)
-      case "sq8" =>
-        val sq = idx.sq.get
-        val cand = oRows(idx, queryId, dropSelf, allow, idx.codes(_) != null).map { i =>
+      case Codec.Sq8(sq, codes) =>
+        val cand = oRows(idx, queryId, dropSelf, allow, codes(_) != null).map { i =>
           var dab = 0.0; var daa = 0.0; var dbb = 0.0
           (0 until sq.dim).foreach { d =>
             val x = q0(d).toDouble
-            val y = idx.codes(i)(d).toDouble * sq.spans(d) + sq.mins(d).toDouble
+            val y = codes(i)(d).toDouble * sq.spans(d) + sq.mins(d).toDouble
             dab += x * y; daa += x * x; dbb += y * y
           }
           val denom = math.sqrt(daa) * math.sqrt(dbb)
@@ -160,8 +158,7 @@ class TopKParitySpec extends AnyFunSuite {
         }
         oRerank(idx, q0,
           cand.sortBy(t => (t._1.isNaN, -t._1, t._2)).take(shortlist).map(_._3), topK)
-      case "bq" =>
-        val bq = idx.bq.get
+      case Codec.Bq(bq, words) =>
         val qcodes = Array.tabulate(bq.nWords) { w =>
           (0 until 64).foldLeft(0L) { (word, b) =>
             val p = bq.planes(w * 64 + b)
@@ -170,29 +167,29 @@ class TopKParitySpec extends AnyFunSuite {
             if (s > 0) word | (1L << b) else word
           }
         }
-        val cand = oRows(idx, queryId, dropSelf, allow, idx.lcodes(_) != null).map { i =>
+        val cand = oRows(idx, queryId, dropSelf, allow, words(_) != null).map { i =>
           val ham = qcodes.indices.map(j =>
-            java.lang.Long.bitCount(qcodes(j) ^ idx.lcodes(i)(j))).sum
+            java.lang.Long.bitCount(qcodes(j) ^ words(i)(j))).sum
           (ham, idx.ids(i), i)
         }
         oRerank(idx, q0, cand.sortBy(t => (t._1, t._2)).take(shortlist).map(_._3), topK)
-      case "ivf" =>
-        val cells: Seq[Int] = idx.centGraph match {
+      case Codec.Ivf(centroids, cellOf, probe) =>
+        val cells: Seq[Int] = probe match {
           case Some(cp) => oHnsw(cp.g, q0, cp.efSearch, cp.cand, None, None).map(_._1.toInt)
-          case None => idx.centroids.indices
+          case None => centroids.indices
         }
         val probed = cells.map { c =>
           var s = 0.0
-          q0.indices.foreach(i => s += q0(i).toDouble * idx.centroids(c)(i))
+          q0.indices.foreach(i => s += q0(i).toDouble * centroids(c)(i))
           (s, c)
         }.sortBy { case (sim, cid) => (-sim, cid) }.take(shortlist).map(_._2).toSet
         oRerank(idx, q0, oRows(idx, queryId, dropSelf, allow,
-          i => probed.contains(idx.cellOf(i))), topK)
-      case "hnsw" =>
+          i => probed.contains(cellOf(i))), topK)
+      case Codec.Hnsw(g) =>
         val pred: Option[Int => Boolean] =
           if (allow.isEmpty && idx.deleted.isEmpty) None
           else Some((i: Int) => idx.live(i) && oPasses(idx, i, allow))
-        oHnsw(idx.hnsw.get, q0, shortlist, topK,
+        oHnsw(g, q0, shortlist, topK,
           if (dropSelf) Some(queryId) else None, pred).map { case (id, s) => Hit(id, s) }
     }
 
@@ -232,25 +229,24 @@ class TopKParitySpec extends AnyFunSuite {
       Array.tabulate(c.n)(i => if (i % 11 == 7) null else pool(rnd.nextInt(pool.length)).clone())
     }
     val cb = Pq.Codebooks(Array.fill(2, 4, Dim / 2)(grid(rnd)), m = 2, k = 4, dim = Dim)
-    val pq = Index("pq", "pq", None, Some(cb), ids, vecs, codes(4, 2),
-      Array.empty, Array.empty, attrs, deleted = deleted)
-    val opq = pq.copy(name = "opq", family = "opq",
-      rot = Some(Array.fill(Dim, Dim)(grid(rnd).toDouble)), codes = codes(4, 2))
+    val pq = Index("pq", ids, vecs, Codec.Pq(cb, None, codes(4, 2)), attrs, deleted)
+    val opq = pq.copy(name = "opq",
+      codec = Codec.Pq(cb, Some(Array.fill(Dim, Dim)(grid(rnd).toDouble)), codes(4, 2)))
     // all-zero mins half the time: an all-zero code row then decodes to
     // the zero vector and its approx cosine is NaN
     val mins = if (rnd.nextBoolean()) new Array[Float](Dim) else Array.fill(Dim)(-rnd.nextInt(3) / 2.0f)
     val sqCodes = codes(256, Dim).zipWithIndex.map { case (cs, i) =>
       if (cs != null && i % 5 == 1) new Array[Int](Dim) else cs }
-    val sq8 = Index("sq8", "sq8", None, None, ids, vecs, sqCodes, Array.empty, Array.empty,
-      attrs, sq = Some(Sq.Quantizer(mins, mins.map(_ + 2.0f))), deleted = deleted)
+    val sq8 = Index("sq8", ids, vecs, Codec.Sq8(Sq.Quantizer(mins, mins.map(_ + 2.0f)), sqCodes),
+      attrs, deleted)
     val words = Array.fill(math.max(1, c.n / 3))(rnd.nextLong() & rnd.nextLong())
-    val bq = Index("bq", "bq", None, None, ids, vecs, Array.empty, Array.empty, Array.empty,
-      attrs, deleted = deleted,
-      bq = Some(Bq.Quantizer(Array.fill(64, Dim)(grid(rnd).toDouble), 7L)),
-      lcodes = Array.tabulate(c.n)(i =>
-        if (i % 10 == 3) null else Array(words(rnd.nextInt(words.length)))))
-    val ivf = Index("ivf", "ivf", None, None, ids, vecs, Array.empty,
-      Array.fill(3, Dim)(grid(rnd)), Array.fill(c.n)(rnd.nextInt(3)), attrs, deleted = deleted)
+    val bq = Index("bq", ids, vecs,
+      Codec.Bq(Bq.Quantizer(Array.fill(64, Dim)(grid(rnd).toDouble), 7L),
+        Array.tabulate(c.n)(i =>
+          if (i % 10 == 3) null else Array(words(rnd.nextInt(words.length))))),
+      attrs, deleted)
+    val ivf = Index("ivf", ids, vecs,
+      Codec.Ivf(Array.fill(3, Dim)(grid(rnd)), Array.fill(c.n)(rnd.nextInt(3))), attrs, deleted)
     val ivfGraph = LocalAnn.withCentroidGraph(ivf, efSearch = 2, cand = 2, m = 2,
       efConstruction = 4).copy(name = "ivf_graph")
     val g = Hnsw.build(ids.toSeq.zip(vecs), m = 3, efConstruction = 6)
